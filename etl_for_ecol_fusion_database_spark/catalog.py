@@ -125,7 +125,11 @@ def effective_scan_parallelism(sf_dir: str, name: str, cap: int = 1 << 30) -> in
     is a driver-side O(footer) read, zero Spark jobs, same pattern as
     :func:`table_row_count`; the ``cap`` early-exit keeps the listing cost
     bounded on many-file production layouts (where the answer is simply
-    ">= target" after a handful of footers)."""
+    ">= target" after a handful of footers).
+
+    The count is only an UPPER bound on the scan tasks that emit rows: the
+    planner may pack several row groups into one split, and a row group may
+    hold no row that survives pushed filters."""
     import pyarrow.parquet as pq
 
     path = table_path(sf_dir, name)
@@ -163,7 +167,16 @@ def load_table_rebalanced(
     §2.5's SPARK-38388 note — no round-robin), and filters/pruning push
     through a RepartitionByExpression, so pushed predicates still reach the
     scan.  Use ONLY where map-stage work dominates: a rebalance ahead of a
-    broadcast-joined or tiny relation is pure overhead."""
+    broadcast-joined or tiny relation is pure overhead.  A table without a
+    registered primary key raises ``ValueError`` whatever its layout: there
+    is no deterministic key to hash on, and a round-robin fallback would
+    hide that."""
+    pk = PRIMARY_KEYS.get(name)
+    if not pk:
+        raise ValueError(
+            f"load_table_rebalanced: table {name!r} has no primary key in "
+            "catalog.PRIMARY_KEYS to hash-partition on"
+        )
     df = load_table(spark, sf_dir, name)
     if os.environ.get("SPARK_GRAFT_REBALANCE", "").strip().lower() == "off":
         # measurement kill-switch (scripts/ab_probe.py) and the documented
@@ -174,11 +187,6 @@ def load_table_rebalanced(
     target = spark.sparkContext.defaultParallelism
     if target <= 1 or effective_scan_parallelism(sf_dir, name, cap=target) >= target:
         return df
-    pk = PRIMARY_KEYS.get(name)
-    if not pk:
-        # round-robin fallback; safe under retry because
-        # spark.sql.execution.sortBeforeRepartition stays at its default
-        return df.repartition(target)
     return df.repartition(target, *[F.col(c.strip()) for c in pk.split(",")])
 
 
@@ -209,6 +217,43 @@ def load_sampled(spark: SparkSession, sf_dir: str, name: str, n: int) -> DataFra
     return load_table(spark, sf_dir, name).limit(n)
 
 
+def local_relation(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """A driver-local literal table (``rows`` of tuples, ``schema`` a
+    StructType or DDL string) as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(list, schema)`` builds a Python RDD
+    (``Scan ExistingRDD`` over ``applySchemaToPythonRDD``), so every plan
+    that reads it forks Python workers just to ship the literals — and a
+    broadcast of it runs a Spark job in them.  An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalTableScan`` instead: no Python worker, values binary-exact,
+    schema and nullability as given.  A NULL in a non-nullable field
+    raises, as ``createDataFrame``'s schema verification does.
+
+    Without pyarrow (where the operators' pure-JVM fallbacks run, e.g.
+    ``clustering.assign_clusters_join``) the Python-RDD path is the only
+    one left, so the table is built that way."""
+    try:
+        import pyarrow as pa
+    except ImportError:
+        return spark.createDataFrame(rows, schema)
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = []
+    for i, field in enumerate(arrow_schema):
+        col = pa.array([r[i] for r in rows], type=field.type)
+        if col.null_count and not field.nullable:
+            raise ValueError(f"local_relation: NULL in non-nullable field {field.name!r}")
+        columns.append(col)
+    table = pa.Table.from_arrays(columns, schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
+
+
 def register_views(spark: SparkSession, sf_dir: str, tables=FIXTURE_TABLES) -> None:
     """Register every fixture table as a temp view so pipelines can run as
     Spark SQL (S17 analogue of CREATE OR REPLACE VIEW)."""
@@ -227,7 +272,7 @@ def list_tables(spark: SparkSession) -> DataFrame:
             T.StructField("is_temporary", T.BooleanType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)
 
 
 def reflect_columns(spark: SparkSession, df: DataFrame, table_name: str) -> DataFrame:
@@ -251,7 +296,7 @@ def reflect_columns(spark: SparkSession, df: DataFrame, table_name: str) -> Data
             T.StructField("ordinal_position", T.IntegerType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)
 
 
 def constraints_metadata(table: str) -> dict:
@@ -302,4 +347,4 @@ def list_physical_layout(spark: SparkSession, table: str) -> DataFrame:
             T.StructField("expression", T.StringType(), False),
         ]
     )
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import local_relation
+
 
 def _sq_dist(vec_col: str, centroid: list[float]):
     """Squared L2 distance between an array column and a Python-side
@@ -95,7 +97,8 @@ def assign_clusters_join(
     large k — the interpreted per-(row, centroid) fold here costs ~50x
     the vectorized kernel."""
     spark = df.sparkSession
-    cent = spark.createDataFrame(
+    cent = local_relation(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         schema="_cidx int, _cv array<double>",
     )

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..catalog import local_relation
+
 
 def dot_expr(a: str | Column, b: str | Column) -> Column:
     """Sequential-fold dot product with per-element double casts.
@@ -203,7 +205,7 @@ def _brute_force_scores_arrow(
     if not qrows:
         # no ids below n_queries: the fold path returns an empty relation,
         # so the kernel must too instead of crashing np.stack (ADVICE r13)
-        return df.sparkSession.createDataFrame([], out_schema)
+        return local_relation(df.sparkSession, [], out_schema)
     q_ids = np.array([int(r.q_id) for r in qrows], dtype=np.int64)
     qm = np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows])
     d = qm.shape[1]
@@ -763,7 +765,7 @@ def _quantized_scores_arrow(
     if not qrows:
         # no ids below n_queries: the fold path returns an empty relation,
         # so the kernel must too instead of crashing np.stack (ADVICE r13)
-        return df.sparkSession.createDataFrame([], out_schema)
+        return local_relation(df.sparkSession, [], out_schema)
     q_ids = np.array([int(r.q_id) for r in qrows], dtype=np.int64)
     qm = _quantize_rows(np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows]))
     d = qm.shape[1]

@@ -5,7 +5,7 @@ Re-expresses the reference's 7-CTE PostgreSQL view
 (/root/reference/create_view_vw_valid_collision_from_oracle.sql) as ONE lazy
 DataFrame DAG.  Stage map (SURVEY.md §3.3):
 
-    cutoff dim (U1/F1, sql:2-26)  -> literal DataFrame, broadcast
+    cutoff dim (U1/F1, sql:2-26)  -> JVM LocalRelation, broadcast
     earliest date (A1/A2, :27-37) -> groupBy(collision_id).min(created_ts)
     case year (F3, :38-47)        -> year() projection
     with cutoff (J1, :48-58)      -> broadcast inner join on created_year
@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..catalog import local_relation
+
 #: the (created_year -> cutoff_end_date) literal dimension.  The reference
 #: hard-codes 21 rows for 2004-2024 (sql:2-26); the fixture flavor spans the
 #: events fixture's year range with one mid-stream cutoff (2024-01-15) so the
@@ -69,9 +71,11 @@ VALID_STATUSES: tuple[str, str] = ("purchase", "signup")
 
 
 def cutoff_dates_df(spark: SparkSession) -> DataFrame:
-    """U1: the literal-table UNION ALL constructor (sql:2-26) as a
-    createDataFrame literal; F1 TO_DATE applied to each row."""
-    df = spark.createDataFrame(CUTOFF_ROWS, "created_year INT, cutoff_end_date STRING")
+    """U1: the literal-table UNION ALL constructor (sql:2-26) as a JVM
+    ``LocalRelation`` (``catalog.local_relation`` — a ``LocalTableScan``,
+    so the plans that broadcast it never start a Python worker); F1
+    TO_DATE applied to each row."""
+    df = local_relation(spark, CUTOFF_ROWS, "created_year INT, cutoff_end_date STRING")
     return df.select(
         F.col("created_year"),
         F.to_date("cutoff_end_date", "yyyy-MM-dd").alias("cutoff_end_date"),

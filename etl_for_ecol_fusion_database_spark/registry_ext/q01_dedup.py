@@ -22,7 +22,6 @@ from ._shared import (  # noqa: F401
     _STOP_LIST,
     N_SYNTHETIC_NEAR_DUPS,
     _marker_list,
-    _tp,
     _rt_tmpdir,
     _t,
     _with_synthetic_near_dups,

@@ -23,7 +23,6 @@ from ._shared import (  # noqa: F401
     _marker_list,
     _rt_tmpdir,
     _t,
-    _tp,
     _with_synthetic_near_dups,
 )
 

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from ..catalog import load_table  # noqa: F401
+from ..catalog import load_table, local_relation  # noqa: F401
 from ..operators import dedup, multimodal, sampling, similarity, text  # noqa: F401
 from ..registry import query  # noqa: F401
 from ._shared import (  # noqa: F401
@@ -413,7 +413,8 @@ def x5_enriched_events(spark, sf_dir):
     the stream side never holds state."""
     from ..streaming import events_stream as es
 
-    dim = spark.createDataFrame(
+    dim = local_relation(
+        spark,
         [
             ("click", "ui"),
             ("view", "ui"),
@@ -421,7 +422,7 @@ def x5_enriched_events(spark, sf_dir):
             ("signup", "account"),
             ("error", "ops"),
         ],
-        ["event_type", "category"],
+        "event_type STRING, category STRING",
     )
     events = load_table(spark, sf_dir, "events")
     return (

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from ..catalog import load_table  # noqa: F401
+from ..catalog import load_table, local_relation  # noqa: F401
 from ..operators import dedup, multimodal, sampling, similarity, text  # noqa: F401
 from ..registry import query  # noqa: F401
 from ._shared import (  # noqa: F401
@@ -24,7 +24,6 @@ from ._shared import (  # noqa: F401
     _marker_list,
     _rt_tmpdir,
     _t,
-    _tp,
     _with_synthetic_near_dups,
 )
 
@@ -251,7 +250,7 @@ def x2_pq_adc_topk(spark, sf_dir):
             for c in range(4)
         ]
     )
-    dtable = spark.createDataFrame(dt_rows, schema)
+    dtable = local_relation(spark, dt_rows, schema)
     codes = clustering.pq_encode(emb, "vec_id", "v", codebooks, sub_dim=16)
     wide = codes.groupBy("id").agg(
         *[
@@ -485,11 +484,13 @@ def _ivf_pq_search(spark, sf_dir, index_sink: str | None = None):
             for c in range(4)
         ]
         dt_rows.append((q_id, *vals))
-    probes = spark.createDataFrame(
+    probes = local_relation(
+        spark,
         probe_rows,
         StructType([StructField("q_id", LongType()), StructField("cell", IntegerType())]),
     )
-    dtable = spark.createDataFrame(
+    dtable = local_relation(
+        spark,
         dt_rows,
         StructType(
             [StructField("q_id", LongType())]

@@ -17,7 +17,6 @@ from ._shared import (
     N_SYNTHETIC_NEAR_DUPS,
     _STOP_LIST,
     _t,
-    _tp,
     _with_synthetic_exact_dups,
 )
 from .q01_dedup import _SPAN_POLY, _portable_sig_ctes

@@ -762,3 +762,22 @@ def test_duplicated_spans_slim_rows_keyed_shuffles(spark, sf_dir):
     assert "CartesianProduct" not in fold_plan
     m = re.search(r"Generate posexplode\([^\n]*?\), \[(\w+)#\d+L?\]", fold_plan)
     assert m and m.group(1) == "id", f"Generate must carry only the id\n{fold_plan}"
+
+
+def test_literal_tables_are_jvm_local_relations(spark, sf_dir):
+    """Driver-local literal tables (the flagship family's cutoff dim, the
+    x5 dimension, the PQ distance/probe tables) must plan as a JVM
+    ``LocalTableScan``: a ``createDataFrame(list)`` Python-RDD scan would
+    fork Python workers in otherwise JVM-only plans just to broadcast a
+    few literals (catalog.local_relation)."""
+    for name in (
+        "flagship_valid_cohort",
+        "fusion_etl_collisions",
+        "x5_enriched_events",
+        "x2_pq_adc_topk",
+    ):
+        plan = _final_plan(registry.QUERIES[name](spark, sf_dir))
+        assert "LocalTableScan" in plan, f"{name}: literal table is not a LocalTableScan\n{plan}"
+        assert "applySchemaToPythonRDD" not in plan and "Scan ExistingRDD" not in plan, (
+            f"{name}: plan still scans a Python RDD\n{plan}"
+        )

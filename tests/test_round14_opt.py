@@ -7,7 +7,8 @@ queries on one-row-group fixture layouts (guide §2.5 input skew), and
 - ``load_table_rebalanced`` must be value-identical to ``load_table``
   (it only moves rows between partitions), must be a NO-OP when the file
   layout already feeds ``defaultParallelism`` scan tasks, and must honor
-  the ``SPARK_GRAFT_REBALANCE=off`` kill-switch;
+  the ``SPARK_GRAFT_REBALANCE=off`` kill-switch, and must refuse a table
+  without a registered primary key;
 - ``effective_scan_parallelism`` reads row groups from footers (the
   quantity that bounds emitting scan tasks), with the early-exit cap;
 - unrecognized ``kernel`` values raise instead of silently taking the
@@ -74,6 +75,14 @@ def test_rebalance_kill_switch(spark):
         assert reb.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
     finally:
         del os.environ["SPARK_GRAFT_REBALANCE"]
+
+
+def test_rebalance_without_primary_key_raises(spark):
+    """A table with no registered PK has no deterministic key to hash on:
+    the loader must name the table and refuse, not fall back to a silent
+    round-robin repartition, whatever the file layout."""
+    with pytest.raises(ValueError, match="no_pk_table"):
+        load_table_rebalanced(spark, SF_SMOKE, "no_pk_table")
 
 
 def test_unknown_kernel_raises(spark):
