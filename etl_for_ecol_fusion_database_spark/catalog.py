@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .kernels import use_arrow
+
 #: fixture tables generated by the driver (TESTDATA.md)
 FIXTURE_TABLES = (
     "region",
@@ -232,13 +234,13 @@ def local_relation(
     schema and nullability as given.  A NULL in a non-nullable field
     raises, as ``createDataFrame``'s schema verification does.
 
-    Without pyarrow (where the operators' pure-JVM fallbacks run, e.g.
+    Without the Arrow dependencies (``kernels.use_arrow("auto")`` false —
+    where the operators' pure-JVM fallbacks run, e.g.
     ``clustering.assign_clusters_join``) the Python-RDD path is the only
     one left, so the table is built that way."""
-    try:
-        import pyarrow as pa
-    except ImportError:
+    if not use_arrow("auto"):
         return spark.createDataFrame(rows, schema)
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):

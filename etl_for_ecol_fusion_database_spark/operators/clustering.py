@@ -27,9 +27,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..catalog import local_relation
+from ..kernels import checked_id_series, nullable_int_dtype, use_arrow
 
 
 def _sq_dist(vec_col: str, centroid: list[float]):
@@ -289,15 +289,8 @@ def assign_clusters_auto(
         big = k > 32 or (
             row_count_hint is not None and row_count_hint * k * dim > 1_000_000
         )
-        if big:
-            try:
-                import numpy  # noqa: F401 — Arrow kernel deps, probed only
-                import pandas  # noqa: F401
-                import pyarrow  # noqa: F401
-
-                return assign_clusters_batched(df, vec_col, centroids)
-            except ImportError:
-                pass
+        if big and use_arrow("auto"):
+            return assign_clusters_batched(df, vec_col, centroids)
     return assign_clusters(df, vec_col, centroids)
 
 
@@ -529,34 +522,13 @@ def pq_encode(
     ``codebooks[j]`` is the list of codewords for subspace ``j``.  Output
     is long-form ``(id, subspace, code)``.
 
-    ``kernel="auto"`` (default) encodes every subspace in ONE Arrow pass
-    (``mapInPandas``; one matmul-pruned exact argmin per subspace slice,
-    winners bit-identical to the folds — see
-    :func:`assign_clusters_batched`) when numpy/pandas/pyarrow import;
-    ``"fold"`` keeps the pure-JVM plan — a UNION of one narrow
-    ``assign_clusters`` projection per subspace: codewords enter as
-    broadcast literals, vectors never shuffle, and the union is
-    plan-level only (no exchange), so encoding cost is one scan of the
-    corpus (of interpreted per-codeword folds — the reason auto prefers
-    the Arrow pass)."""
-    use_arrow = kernel == "arrow"
-    if kernel == "auto":
-        try:
-            import numpy  # noqa: F401 — Arrow kernel deps, probed only
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-
-            # the Arrow kernel round-trips ids through numpy — only
-            # integral ids are guaranteed lossless AND schema-identical
-            # to the fold union plan, so auto never diverges on exotic
-            # id types (string/decimal ids take the fold path)
-            use_arrow = isinstance(
-                df.schema[id_col].dataType,
-                (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-            )
-        except ImportError:
-            use_arrow = False
-    if use_arrow:
+    ``kernel`` follows the fold/Arrow contract of ``kernels.use_arrow``.
+    The fold plan is a UNION of one narrow ``assign_clusters`` projection
+    per subspace: codewords enter as broadcast literals, vectors never
+    shuffle, and the union is plan-level only (no exchange), so encoding
+    costs one scan of the corpus — of interpreted per-codeword folds,
+    which is why ``"auto"`` takes :func:`_pq_encode_arrow`."""
+    if use_arrow(kernel, df.schema[id_col].dataType):
         return _pq_encode_arrow(df, id_col, vec_col, codebooks, sub_dim)
     parts = []
     for j, codebook in enumerate(codebooks):
@@ -587,23 +559,16 @@ def _pq_encode_arrow(
     """Single-pass Arrow PQ encoder: one ``mapInPandas`` over the corpus,
     one :func:`_fold_argmin_d2` per subspace slice per batch — winners
     carry the folds' exact first-min semantics, so output codes are
-    bit-identical to the JVM union plan (pinned in
-    tests/test_round10_kernels.py)."""
+    bit-identical to the JVM union plan; NULL ids pass through with their
+    codes, as the union projects them."""
     import numpy as np
     from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from . import vectorized
 
     books = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
     m = len(books)
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
     id_type = df.schema[id_col].dataType
-    # NULL ids arrive float64/object from the Arrow→pandas exchange; the
-    # masked extension dtype keeps them null through the round-trip (fold
-    # parity: the union plan projects null ids through with their codes)
-    id_dtype = vectorized.nullable_int_dtype(id_type)
-    # preserve the id column's own type so the Arrow plan's schema is
-    # identical to the fold union plan's for every integral id width
+    id_dtype = nullable_int_dtype(id_type)
     out_schema = StructType(
         [
             StructField("id", id_type),
@@ -619,7 +584,7 @@ def _pq_encode_arrow(
             if len(pdf) == 0:
                 continue
             v = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["_v"]])
-            ids = vectorized.checked_id_series(pdf["id"], id_dtype)
+            ids = checked_id_series(pdf["id"], id_dtype)
             n = v.shape[0]
             codes = np.empty((m, n), dtype=np.int32)
             for j in range(m):

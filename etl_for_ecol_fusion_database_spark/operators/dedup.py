@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..kernels import checked_id_series, nullable_int_dtype, use_arrow
 from .text import normalize_text
 
 # ---------------------------------------------------------------------------
@@ -1049,25 +1050,13 @@ def semantic_dedup(
     ordered to halve the pairs); norms are computed once per vector, never
     per pair; the discard set joins back LEFT ANTI on the id.
 
-    ``pair_kernel`` picks the within-cluster scoring engine (round 10;
-    bit-identical decisions, pinned in tests/test_round10_kernels.py):
-
-    - ``"fold"``: self-join on the cluster id + per-pair higher-order
-      fold.  Correct, but every pair pays an interpreted 2·dim-lambda
-      walk (Catalyst never codegens higher-order functions), which at
-      the sf10 decade made THIS stage ~75% of the query's wall time.
-    - ``"arrow"``: ``groupBy(cluster).applyInPandas`` — one shuffle on
-      the same cluster key the join needed anyway, then a dense numpy
-      kernel per cluster that accumulates dots SCALAR-SEQUENTIALLY
-      across the dim index (the :func:`similarity.dot_expr` fold order,
-      so every raw double is bit-identical).  The kernel only PREFILTERS
-      at ``threshold - 1e-6``; the actual keep/discard decision stays
-      Spark-side as the identical ``round(raw, 6) >= threshold`` both
-      paths share, so engine rounding semantics can never diverge.
-      Per-task memory is bounded: pair blocks of ``<= 2048 x |cluster|``
-      doubles regardless of cluster skew.
-    - ``"auto"`` (default): ``"arrow"`` when numpy/pandas/pyarrow import,
-      else ``"fold"`` — same dependency policy as the assignment step."""
+    ``pair_kernel`` picks the within-cluster scoring engine per the
+    fold/Arrow contract of ``kernels.use_arrow``: the fold is a self-join
+    on the cluster id + a per-pair higher-order fold, which Catalyst never
+    codegens (at the sf10 decade THIS stage was ~75% of the query's wall
+    time); the Arrow twin is :func:`_semdedup_pairs_arrow`.  Both keep
+    the decision Spark-side as the identical ``round(raw, 6) >=
+    threshold``."""
     from . import clustering
     from . import similarity
 
@@ -1085,33 +1074,20 @@ def semantic_dedup(
     # (numpy/pandas/pyarrow) are absent — previously only described as a
     # fallback, never selected (ADVICE r08).  All three paths are pinned
     # bit-identical in tests/test_curation_ops.py.
-    if len(centroids) > 32:
-        try:
-            import numpy  # noqa: F401 — Arrow kernel deps, probed only
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-
-            if len(centroids) > _HIERARCHICAL_K:
-                # flat assignment is N x k x dim and SemDeDup's k grows
-                # with the corpus (constant cluster size), so past this
-                # point the assignment term is the pipeline's one latent
-                # super-linear cost — switch to the two-level IVF-style
-                # kernel: N x (sqrt(k) + probes * sqrt(k)) x dim.
-                # Approximate in the standard IVF sense (a rare
-                # misassignment can only MISS a near-dup pair); the flat
-                # kernel stays the bit-exact oracle-checked path at
-                # every driver/fixture scale below the threshold.
-                assigned = clustering.assign_clusters_hierarchical(
-                    base, "v", centroids
-                )
-            else:
-                assigned = clustering.assign_clusters_batched(
-                    base, "v", centroids
-                )
-        except ImportError:
-            assigned = clustering.assign_clusters_join(
-                base, "v", centroids, "id"
-            )
+    if len(centroids) > 32 and not use_arrow("auto"):
+        assigned = clustering.assign_clusters_join(base, "v", centroids, "id")
+    elif len(centroids) > _HIERARCHICAL_K:
+        # flat assignment is N x k x dim and SemDeDup's k grows with the
+        # corpus (constant cluster size), so past this point the
+        # assignment term is the pipeline's one latent super-linear cost —
+        # switch to the two-level IVF-style kernel: N x (sqrt(k) + probes
+        # * sqrt(k)) x dim.  Approximate in the standard IVF sense (a rare
+        # misassignment can only MISS a near-dup pair); the flat kernel
+        # stays the bit-exact oracle-checked path at every fixture scale
+        # below the threshold.
+        assigned = clustering.assign_clusters_hierarchical(base, "v", centroids)
+    elif len(centroids) > 32:
+        assigned = clustering.assign_clusters_batched(base, "v", centroids)
     else:
         # k <= 32: defer to the measured size-aware dispatch — Arrow when
         # row_count_hint puts N x k x dim past the ~1e6-step breakeven
@@ -1130,25 +1106,7 @@ def semantic_dedup(
         assigned.withColumn("nrm", F.sqrt(similarity.norm_sq_expr("v")))
         .localCheckpoint(eager=False)
     )
-    use_arrow = pair_kernel == "arrow"
-    if pair_kernel == "auto":
-        try:
-            import numpy  # noqa: F401 — Arrow kernel deps, probed only
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-            from pyspark.sql import types as _T
-
-            # the Arrow kernel sorts/round-trips ids through numpy — only
-            # integral ids guarantee the same a.id < b.id ordering and a
-            # lossless round-trip, so auto falls back to the fold path
-            # for exotic id types rather than risking divergence
-            use_arrow = isinstance(
-                withn.schema["id"].dataType,
-                (_T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType),
-            )
-        except ImportError:
-            use_arrow = False
-    if use_arrow:
+    if use_arrow(pair_kernel, withn.schema["id"].dataType):
         # Raw candidate cosines from the per-cluster numpy kernel; the
         # decision itself is the SAME Spark round(raw, 6) >= threshold
         # the fold path applies, on bit-identical raw doubles.
@@ -1185,10 +1143,10 @@ def semantic_dedup(
 def _semdedup_pairs_arrow(withn: DataFrame, threshold: float) -> DataFrame:
     """(id, _raw_cosine) candidate near-dup rows — the higher-id member of
     every within-cluster pair whose RAW cosine clears ``threshold - 1e-6``
-    — via ``groupBy(cluster).applyInPandas``; see :func:`semantic_dedup`
-    ``pair_kernel="arrow"``.
+    — via ``groupBy(cluster).applyInPandas``, the Arrow twin of
+    :func:`semantic_dedup`'s pair join.
 
-    Accumulation contract (the brute_force_topk arrow-kernel contract):
+    Accumulation contract (the one ``similarity._cosine_scores_arrow`` keeps):
     dots fold scalar-sequentially across the dim index in float64
     (``dots += V[:, i, None] * V[None, :, i]``) and the cosine divides by
     ``a.nrm * b.nrm`` — the Spark-computed norm column, passed through
@@ -1205,10 +1163,6 @@ def _semdedup_pairs_arrow(withn: DataFrame, threshold: float) -> DataFrame:
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    from . import vectorized
-
-    # preserve the id column's own (integral — dispatch-gated) type so the
-    # Arrow plan's output schema matches the fold path's exactly
     out_schema = StructType(
         [
             StructField("id", withn.schema["id"].dataType),
@@ -1225,46 +1179,28 @@ def _semdedup_pairs_arrow(withn: DataFrame, threshold: float) -> DataFrame:
         # the (possibly float64/object-materialized) id column round-trips
         # through numpy; survivors are non-null and convert losslessly
         pdf = pdf[pdf["id"].notna()]
-        empty_ids = pd.array([], dtype=vectorized.nullable_int_dtype(
-            out_schema["id"].dataType) or object)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {
-                    "id": empty_ids,
-                    "_raw_cosine": np.empty(0, dtype=np.float64),
-                }
-            )
         ids = pdf["id"].to_numpy(dtype=np.int64)  # non-null after the filter
         order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        nrm = pdf["nrm"].to_numpy(dtype=np.float64)[order]
-        v = np.stack(
-            [np.asarray(x, dtype=np.float64) for x in pdf["v"].to_numpy()[order]]
-        )  # (n, d)
-        d = v.shape[1]
-        cols = np.arange(n)[None, :]
-        out_ids, out_cos = [], []
-        block = 2048
-        with np.errstate(divide="ignore", invalid="ignore"):
-            for s in range(0, n, block):
-                e = min(s + block, n)
-                dots = np.zeros((e - s, n), dtype=np.float64)
-                for i in range(d):
-                    dots += v[s:e, i, None] * v[None, :, i]
-                cos = dots / (nrm[s:e, None] * nrm[None, :])
-                mask = (cols > np.arange(s, e)[:, None]) & (cos >= margin)
-                hit_a, hit_b = np.nonzero(mask)
-                if hit_a.size:
+        ids, n = ids[order], len(ids)
+        out_ids, out_cos = [ids[:0]], [np.empty(0, dtype=np.float64)]
+        if n >= 2:
+            nrm = pdf["nrm"].to_numpy(dtype=np.float64)[order]
+            v = np.stack(
+                [np.asarray(x, dtype=np.float64) for x in pdf["v"].to_numpy()[order]]
+            )  # (n, d)
+            cols = np.arange(n)[None, :]
+            block = 2048
+            with np.errstate(divide="ignore", invalid="ignore"):
+                for s in range(0, n, block):
+                    e = min(s + block, n)
+                    dots = np.zeros((e - s, n), dtype=np.float64)
+                    for i in range(v.shape[1]):
+                        dots += v[s:e, i, None] * v[None, :, i]
+                    cos = dots / (nrm[s:e, None] * nrm[None, :])
+                    mask = (cols > np.arange(s, e)[:, None]) & (cos >= margin)
+                    hit_a, hit_b = np.nonzero(mask)
                     out_ids.append(ids[hit_b])
                     out_cos.append(cos[hit_a, hit_b])
-        if not out_ids:
-            return pd.DataFrame(
-                {
-                    "id": empty_ids,
-                    "_raw_cosine": np.empty(0, dtype=np.float64),
-                }
-            )
         return pd.DataFrame(
             {
                 "id": np.concatenate(out_ids),
@@ -1277,6 +1213,88 @@ def _semdedup_pairs_arrow(withn: DataFrame, threshold: float) -> DataFrame:
         .groupBy("cluster")
         .applyInPandas(score, schema=out_schema)
     )
+
+
+def _gear_hash_rows(normed: DataFrame, window: int) -> DataFrame:
+    """(id, pos, h) rows of ``normed``'s (id, _n) documents: for every
+    full ``window``-gram starting at 1-based ``pos``, the gear/Rabin-style
+    polynomial ``h = (Σ_j code(c_{pos+j}) · 31^j) mod 2147483647`` over
+    code points — pure int64 arithmetic, exactly replayable in ANSI SQL
+    (Spark ``ascii`` and DuckDB ``unicode`` both return the full code
+    point, verified over BMP and astral chars).  Max magnitude
+    0x10FFFF · 31^7 · 8 ≈ 2.4e17, well inside int64.  The numpy twin is
+    :func:`_gear_hashes`.
+
+    Shape: the per-doc POSITION-HASH ARRAY is built in one expression —
+    code points once (O(len)), each window folded with literal 31^j
+    weights by random-access array indexing — then ``posexplode`` emits
+    slim (position, hash) LONG rows.  Two measured traps, ~500-char docs,
+    sf0.1: per-position ``substring(_n, p, 8)`` grams re-scan the string
+    prefix per code-point index (quadratic in doc length), and exploding
+    positions BEFORE hashing makes the Generate node copy the text or
+    char array into every generated row (O(len²) memory traffic, 4-5x
+    slower)."""
+    poly = " + ".join(f"_codes[i + {j}] * {31 ** j}L" for j in range(window))
+    return (
+        normed.select(
+            "id",
+            F.expr(
+                "transform(split(_n, ''), ch -> CAST(ascii(ch) AS BIGINT))"
+            ).alias("_codes"),
+        )
+        .select(
+            "id",
+            F.posexplode(
+                F.expr(
+                    f"transform(sequence(0, greatest(size(_codes) - {window}, 0)),"
+                    f" i -> ({poly}) % 2147483647)"
+                )
+            ).alias("i", "h"),
+        )
+        # docs shorter than the window emit a single i=0 entry whose
+        # out-of-bounds code-point lookups make the whole polynomial
+        # NULL (ANSI off, pinned) — drop them, they have no full gram
+        .filter(F.col("h").isNotNull())
+        .select("id", (F.col("i") + 1).alias("pos"), "h")
+    )
+
+
+def _gear_hashes(texts, window: int):
+    """Numpy twin of :func:`_gear_hash_rows` over one batch of texts (a
+    pandas Series): ``(row, pos, h)`` arrays, one entry per full gram,
+    ``row`` indexing ``texts`` in order and ``pos`` ascending within a row.
+
+    ALL code points of the batch come from one ``utf-32-le`` decode of the
+    concatenation (each char is exactly its code point, what ``ord``
+    returns, and Python strings index code points as Spark does), ALL
+    window hashes from one batch-wide int64 multiply-add with the 31^j
+    weights (same wraparound-free arithmetic as the fold); windows that
+    cross a document boundary are dropped by index arithmetic."""
+    import numpy as np
+
+    sel = np.fromiter(
+        (s is not None and len(s) >= window for s in texts),
+        dtype=bool,
+        count=len(texts),
+    )
+    rows = np.nonzero(sel)[0]
+    if rows.size == 0:
+        return rows, rows, np.empty(0, dtype=np.int64)
+    docs = texts.iloc[rows]
+    lens = np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
+    codes = np.frombuffer("".join(docs).encode("utf-32-le"), dtype="<u4").astype(
+        np.int64
+    )
+    n_win = codes.shape[0] - window + 1
+    acc = codes[:n_win].copy()
+    for j in range(1, window):
+        acc += codes[j : j + n_win] * np.int64(31**j)
+    ks = lens - window + 1  # windows per doc
+    doc_idx = np.repeat(np.arange(len(docs)), ks)
+    within = np.arange(int(ks.sum()), dtype=np.int64) - np.repeat(np.cumsum(ks) - ks, ks)
+    offsets = np.cumsum(lens) - lens  # doc starts in the concatenation
+    h = acc[offsets[doc_idx] + within] % 2147483647
+    return rows[doc_idx], within + 1, h
 
 
 def cdc_chunk_rows(
@@ -1301,89 +1319,34 @@ def cdc_chunk_rows(
     chunk-level dedup find large common spans between near-identical
     documents (the storage-dedup trick, applied to corpus curation).
 
-    Boundary hash: a gear/Rabin-style POLYNOMIAL over code points —
-    ``h(p) = (Σ_j code(c_{p+j}) · 31^j) mod 2147483647`` — pure int64
-    arithmetic, exactly replayable in ANSI SQL (Spark ``ascii`` and DuckDB
-    ``unicode`` both return the full code point, verified over BMP and
-    astral chars).  Real CDC uses a cheap per-position hash by design;
-    hashing every position with the md5-prefix family was measured 2-2.4x
-    slower (the digest dominates, whether codegen or HOF-interpreted).
-    Max magnitude: 0x10FFFF · 31^7 · 8 ≈ 2.4e17, well inside int64.
+    Boundary hash: the gear polynomial of :func:`_gear_hash_rows`.  Real
+    CDC uses a cheap per-position hash by design; hashing every position
+    with the md5-prefix family was measured 2-2.4x slower.
 
-    Shape, ``kernel="fold"`` (the ANSI/oracle-replayable witness):
-    boundary detection builds the per-doc POSITION-HASH ARRAY in
-    one expression — map chars to code points once (O(len)), fold each
-    window with literal 31^j weights (O(window) int ops per position, all
-    random-access array indexing) — then ``posexplode`` emits slim
-    (position, hash) LONG rows for the boundary filter.  Two measured
-    traps, ~500-char docs, sf0.1: per-position ``substring(_n, p, 8)``
-    grams re-scan the string prefix per code-point index (quadratic in
-    doc length — 2x slower here and unboundedly worse on long docs), and
-    exploding positions BEFORE hashing makes the Generate node copy its
-    required child columns (text or char array) into every generated row
-    (O(len²) memory traffic, 4-5x slower).  Only boundary rows
-    (~1/modulus of positions) survive to the per-doc ``lead`` window that
-    turns cut positions into (start, end) spans, so the one exchange in
-    the plan shuffles cut rows, not character rows.
-
-    ``kernel="arrow"`` (round 11; ``"auto"`` picks it when
-    numpy/pandas/pyarrow import): the per-position polynomial is exactly
-    the interpreted-HOF cost class the round-10 kernels removed from the
-    embedding heads — O(len x window) lambda evaluations per doc — so the
-    whole operator collapses to ONE ``mapInPandas`` pass: a
-    sliding-window int64 matmul for the boundary hashes plus row-local
-    Python slicing for the chunks.  Spark strings and Python strings are
-    both code-point indexed (``split('')``/``ascii``/``substring`` vs
-    ``ord``/slices — verified identical over BMP and astral chars), and
-    the hash is pure int64 arithmetic, so cut positions and chunk text
-    are bit-identical to the fold plan (pinned in
-    tests/test_round4b_ops.py).  Zero shuffles remain: the fold plan's
-    posexplode/union/window/join DAG becomes scan -> mapInPandas ->
-    project(md5).
+    ``kernel`` follows the fold/Arrow contract of ``kernels.use_arrow``.
+    The fold plan (the ANSI/oracle-replayable witness) keeps only the cut
+    rows (~1/modulus of positions) for the per-doc ``lead`` window that
+    turns cut positions into (start, end) spans, so its one exchange
+    shuffles cut rows, not character rows.  The Arrow twin
+    (:func:`_cdc_chunk_rows_arrow`) is one ``mapInPandas`` pass — scan ->
+    mapInPandas -> project(md5), zero shuffles.  NULL ids produce no
+    chunks on either path: the fold re-attaches text through an
+    equi-join on id, which rejects NULLs.
     """
     from .text import normalize_text
 
     normed = df.select(F.col(id_col).alias("id"), normalize_text(text_col).alias("_n"))
-    use_arrow = kernel == "arrow"
-    if kernel == "auto":
-        try:
-            import numpy  # noqa: F401 — Arrow kernel deps, probed only
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-
-            use_arrow = True
-        except ImportError:
-            use_arrow = False
-    if use_arrow:
+    if use_arrow(kernel, normed.schema["id"].dataType):
         chunked = _cdc_chunk_rows_arrow(normed, window, modulus)
         return chunked.select(
             "id", "chunk_idx", "start", "chunk",
             F.md5("chunk").alias("chunk_hash"),
         )
-    # hash array: position-hash i (0-based) covers chars i..i+window-1,
-    # i.e. 1-based cut position p = i + 1; candidate cuts are
-    # 2..len-window+1, so i >= 1.  Docs shorter than the window yield a
-    # single i=0 entry — filtered out, same as the former
-    # sequence(2, greatest(last_start, 2)) guard.
-    poly = " + ".join(f"_codes[i + {j}] * {31 ** j}L" for j in range(window))
+    # candidate cuts are 1-based positions 2..len-window+1
     cand = (
-        normed.select(
-            "id",
-            F.expr(
-                "transform(split(_n, ''), ch -> CAST(ascii(ch) AS BIGINT))"
-            ).alias("_codes"),
-        )
-        .select(
-            "id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(0, greatest(size(_codes) - {window}, 0)),"
-                    f" i -> ({poly}) % 2147483647)"
-                )
-            ).alias("i", "h"),
-        )
-        .filter((F.col("i") >= 1) & (F.col("h") % modulus == 0))
-        .select("id", (F.col("i") + 1).alias("p"))
+        _gear_hash_rows(normed, window)
+        .filter((F.col("pos") >= 2) & (F.col("h") % modulus == 0))
+        .select("id", F.col("pos").alias("p"))
     )
     # spans are derived from SLIM (id, p) rows — the window must not carry
     # the document text, or shuffle bytes go quadratic in doc length
@@ -1416,24 +1379,15 @@ def cdc_chunk_rows(
 
 
 def _cdc_chunk_rows_arrow(normed: DataFrame, window: int, modulus: int) -> DataFrame:
-    """One-pass Arrow CDC chunker over (id, _n) rows: per doc, code points
-    via ``ord`` (Python strings are code-point sequences, same indexing as
-    Spark's ``split('')``/``substring``), boundary hashes via a sliding-
-    window int64 matmul with the 31^j weight vector, chunks via row-local
-    slices.  Cut positions and chunk text are bit-identical to the fold
-    plan's (integer arithmetic only; pinned in tests)."""
+    """One-pass Arrow CDC chunker over (id, _n) rows: the batch's gram
+    hashes from :func:`_gear_hashes`, filtered to the cuts, then chunks
+    via row-local slices.  Cut positions and chunk text are bit-identical
+    to the fold plan's (integer arithmetic only)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-    from . import vectorized
-
     id_type = normed.schema["id"].dataType
-    # NULL ids arrive float64/object from the Arrow→pandas exchange; the
-    # masked extension dtype keeps the id column exact instead of silently
-    # materializing float64.  Fold parity for null ids: the fold plan
-    # re-attaches text through an equi-join on id, which is null-REJECTING
-    # — null-id docs produce no chunks — so the kernel skips them too.
-    id_dtype = vectorized.nullable_int_dtype(id_type)
+    id_dtype = nullable_int_dtype(id_type)
     out_schema = StructType(
         [
             StructField("id", id_type),
@@ -1442,15 +1396,19 @@ def _cdc_chunk_rows_arrow(normed: DataFrame, window: int, modulus: int) -> DataF
             StructField("chunk", StringType()),
         ]
     )
-    weights = np.array([31 ** j for j in range(window)], dtype=np.int64)
 
     def chunker(batches):
         import pandas as pd
 
         for pdf in batches:
+            row, pos, h = _gear_hashes(pdf["_n"], window)
+            cut = (pos >= 2) & (h % modulus == 0)
+            row, pos = row[cut], pos[cut].tolist()
+            lo = np.searchsorted(row, np.arange(len(pdf)), side="left")
+            hi = np.searchsorted(row, np.arange(len(pdf)), side="right")
             ids, idxs, starts, chunks = [], [], [], []
-            in_ids = vectorized.checked_id_series(pdf["id"], id_dtype)
-            for doc_id, s in zip(in_ids, pdf["_n"]):
+            in_ids = checked_id_series(pdf["id"], id_dtype)
+            for r, (doc_id, s) in enumerate(zip(in_ids, pdf["_n"])):
                 if doc_id is None or doc_id is pd.NA:
                     continue  # fold parity: the text re-attach join drops null ids
                 if s is None:
@@ -1459,21 +1417,8 @@ def _cdc_chunk_rows_arrow(normed: DataFrame, window: int, modulus: int) -> DataF
                     ids.append(doc_id); idxs.append(0)
                     starts.append(1); chunks.append(None)
                     continue
-                n = len(s)
-                cuts = [1]
-                if n >= window + 1:
-                    # utf-32-le round-trip: each char is exactly its code
-                    # point (what ord returns), decoded in one C pass
-                    # instead of one interpreter call per character
-                    codes = np.frombuffer(
-                        s.encode("utf-32-le"), dtype="<u4"
-                    ).astype(np.int64)
-                    sw = np.lib.stride_tricks.sliding_window_view(codes, window)
-                    # candidate 0-based window index i in [1, n-window];
-                    # cut position p = i + 1 (1-based, fold-identical)
-                    h = (sw[1 : n - window + 1] @ weights) % 2147483647
-                    cuts.extend((np.nonzero(h % modulus == 0)[0] + 2).tolist())
-                bounds = cuts + [n + 1]
+                cuts = [1] + pos[lo[r] : hi[r]]
+                bounds = cuts + [len(s) + 1]
                 for k, p in enumerate(cuts):
                     ids.append(doc_id); idxs.append(k)
                     starts.append(p); chunks.append(s[p - 1 : bounds[k + 1] - 1])
@@ -1792,27 +1737,15 @@ def incremental_minhash_matches(
     )
 
 
-def _duplicated_pos_rows_arrow(normed: DataFrame, window: int) -> DataFrame:
-    """(id, pos, h) rolling-gram hash rows via one ``mapInPandas`` pass:
-    ALL code points of a batch in one vectorized decode
-    (``utf-32-le`` round-trip — each char is exactly its code point, the
-    same value ``ord`` returns), ALL position hashes in one batch-wide
-    int64 multiply-add with the 31^j weight vector, and the per-doc rows
-    carved out with repeat/arange index arithmetic — the
-    ``_cdc_chunk_rows_arrow`` math emitting every position instead of
-    boundary cuts, with the r13 per-char/per-doc Python loops removed
-    (guide §4.2: one native pass per batch; the original
-    ``np.fromiter(map(ord, s))`` paid one interpreter call per CHARACTER).
-    Bit-identical to the fold plan's hashes (pure int64 arithmetic, same
-    wraparound); null-id docs are KEPT (fold parity: duplicated_spans
-    never equi-joins on id)."""
+def _gear_hash_rows_arrow(normed: DataFrame, window: int) -> DataFrame:
+    """Arrow twin of :func:`_gear_hash_rows`: the (id, pos, h) rows of
+    :func:`_gear_hashes` via one ``mapInPandas`` pass.  NULL-id docs are
+    KEPT (fold parity: duplicated_spans never equi-joins on id)."""
     import numpy as np
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    from . import vectorized
-
     id_type = normed.schema["id"].dataType
-    id_dtype = vectorized.nullable_int_dtype(id_type)
+    id_dtype = nullable_int_dtype(id_type)
     out_schema = StructType(
         [
             StructField("id", id_type),
@@ -1820,56 +1753,18 @@ def _duplicated_pos_rows_arrow(normed: DataFrame, window: int) -> DataFrame:
             StructField("h", LongType()),
         ]
     )
-    weights = [np.int64(31**j) for j in range(window)]
 
     def hasher(batches):
         import pandas as pd
 
-        empty = {
-            "id": pd.Series([], dtype=id_dtype or "object"),
-            "pos": np.empty(0, dtype=np.int32),
-            "h": np.empty(0, dtype=np.int64),
-        }
         for pdf in batches:
-            in_ids = vectorized.checked_id_series(pdf["id"], id_dtype)
-            texts = pdf["_n"]
-            # docs with a full gram only (len >= window; None dropped)
-            sel = np.fromiter(
-                (s is not None and len(s) >= window for s in texts),
-                dtype=bool,
-                count=len(texts),
-            )
-            if not sel.any():
-                yield pd.DataFrame(empty)
-                continue
-            sel_pos = np.nonzero(sel)[0]
-            docs = texts.iloc[sel_pos]
-            lens = np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
-            # one decode for the whole batch: utf-32-le bytes of the
-            # concatenation are the code points, 4 bytes per char
-            codes = np.frombuffer(
-                "".join(docs).encode("utf-32-le"), dtype="<u4"
-            ).astype(np.int64)
-            # all window hashes over the concatenation (8 multiply-adds,
-            # int64 wraparound identical to the per-doc matmul), then
-            # windows crossing doc boundaries dropped by index arithmetic
-            n_win = codes.shape[0] - window + 1
-            acc = codes[:n_win] * weights[0]
-            for j in range(1, window):
-                acc += codes[j : j + n_win] * weights[j]
-            big_h = acc % 2147483647
-            ks = lens - window + 1  # windows per doc
-            total = int(ks.sum())
-            doc_idx = np.repeat(np.arange(len(docs)), ks)
-            within = np.arange(total, dtype=np.int64) - np.repeat(
-                np.cumsum(ks) - ks, ks
-            )
-            offsets = np.cumsum(lens) - lens  # doc starts in the concat
+            row, pos, h = _gear_hashes(pdf["_n"], window)
+            in_ids = checked_id_series(pdf["id"], id_dtype)
             yield pd.DataFrame(
                 {
-                    "id": in_ids.iloc[sel_pos[doc_idx]].reset_index(drop=True),
-                    "pos": (within + 1).astype(np.int32),
-                    "h": big_h[offsets[doc_idx] + within],
+                    "id": in_ids.iloc[row].reset_index(drop=True),
+                    "pos": pos.astype(np.int32),
+                    "h": h,
                 }
             )
 
@@ -1895,13 +1790,13 @@ def duplicated_spans(
     blocks, and quoted passages embedded in otherwise-unique documents.
 
     Spark shape (the suffix-array recipe re-expressed in joins, exact up
-    to hash collisions in the gear polynomial — the same code-point
-    ``Σ code·31^j mod p31`` family the CDC chunker replays in DuckDB):
+    to hash collisions in the gear polynomial the CDC chunker uses):
 
-    1. per-doc POSITION-HASH ARRAY in one expression, posexploded to slim
-       ``(id, pos, h)`` long rows — the zero-copy fold shape proven by
-       ``cdc_chunk_rows`` (hashing before exploding keeps the Generate
-       from copying the text into every row);
+    1. slim ``(id, pos, h)`` gram-hash rows: :func:`_gear_hash_rows` on
+       the fold path, :func:`_gear_hash_rows_arrow` on the Arrow
+       path (``kernel`` per ``kernels.use_arrow``; the interpreted
+       per-position fold costs O(len x window) lambda evaluations per
+       doc — probe medians 6.1 -> 4.1 s at sf0.1, 42 -> 22 s at sf1);
     2. duplicated grams via ONE map-side-combined ``groupBy(h)`` — the
        shuffle carries (hash, count) longs, never text;
     3. duplicated positions re-attach through one hash equi-join.  The
@@ -1926,56 +1821,10 @@ def duplicated_spans(
     from .text import normalize_text
 
     normed = df.select(F.col(id_col).alias("id"), normalize_text(text_col).alias("_n"))
-    use_arrow = kernel == "arrow"
-    if kernel == "auto":
-        try:
-            import numpy  # noqa: F401 — Arrow kernel deps, probed only
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-            from pyspark.sql import types as _T
-
-            # ids are carried through pandas; integral types round-trip
-            # exactly via the masked dtypes (null ids stay null — unlike
-            # the CDC chunker, the fold path KEEPS null-id docs here:
-            # there is no id equi-join, only groupings)
-            use_arrow = isinstance(
-                normed.schema["id"].dataType,
-                (_T.ByteType, _T.ShortType, _T.IntegerType, _T.LongType),
-            )
-        except ImportError:
-            use_arrow = False
-    if use_arrow:
-        # the interpreted per-position HOF fold is the same cost class the
-        # round-11 CDC kernel removed — O(len x window) lambda evaluations
-        # per doc; the Arrow pass is one sliding-window int64 matmul per
-        # doc, hashes bit-identical (pure int64 arithmetic, pinned in
-        # tests).  Probe medians: 6.1 -> 4.1 s at sf0.1, 42 -> 22 s at
-        # sf1 (fresh-session runs read as low as 2.2 s at sf0.1).
-        pos_rows = _duplicated_pos_rows_arrow(normed, window)
+    if use_arrow(kernel, normed.schema["id"].dataType):
+        pos_rows = _gear_hash_rows_arrow(normed, window)
     else:
-        poly = " + ".join(f"_codes[i + {j}] * {31 ** j}L" for j in range(window))
-        pos_rows = (
-            normed.select(
-                "id",
-                F.expr(
-                    "transform(split(_n, ''), ch -> CAST(ascii(ch) AS BIGINT))"
-                ).alias("_codes"),
-            )
-            .select(
-                "id",
-                F.posexplode(
-                    F.expr(
-                        f"transform(sequence(0, greatest(size(_codes) - {window}, 0)),"
-                        f" i -> ({poly}) % 2147483647)"
-                    )
-                ).alias("i", "h"),
-            )
-            # docs shorter than the window emit a single i=0 entry whose
-            # out-of-bounds code-point lookups make the whole polynomial
-            # NULL (ANSI off, pinned) — drop them, they have no full gram
-            .filter(F.col("h").isNotNull())
-            .select("id", (F.col("i") + 1).alias("pos"), "h")
-        )
+        pos_rows = _gear_hash_rows(normed, window)
     dup_h = (
         pos_rows.groupBy("h")
         .agg(F.count(F.lit(1)).alias("_c"))
@@ -2026,7 +1875,7 @@ def scrub_duplicated_spans(
     Shape on top of the span finder's plan:
 
     1. qualifying spans come from :func:`duplicated_spans` (same window /
-       min_span semantics, same kernel dispatch);
+       min_span semantics, same ``kernel``);
     2. spans are merged into disjoint character intervals first — two
        maximal GRAM islands are >=2 apart in gram positions yet their
        char ranges (each extending ``window - 1`` past its last gram) can

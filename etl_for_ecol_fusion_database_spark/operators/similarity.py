@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..catalog import local_relation
+from ..kernels import use_arrow
 
 
 def dot_expr(a: str | Column, b: str | Column) -> Column:
@@ -42,7 +42,7 @@ def dot_expr(a: str | Column, b: str | Column) -> Column:
     scale the answer is structural, not expression-level: constant
     planes -> posexplode + flat SUM aggregates
     (portable_hyperplane_signatures_df), bounded query set -> the Arrow
-    kernel (brute_force_topk(kernel="arrow"))."""
+    kernel (:func:`_cosine_scores_arrow`)."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
     return F.aggregate(
@@ -103,33 +103,15 @@ def brute_force_topk(
     k: int = 5,
     n_queries: int = 20,
     snap6: bool = False,
-    kernel: str = "fold",
+    kernel: str = "auto",
 ) -> DataFrame:
     """Exact cosine top-k: the first ``n_queries`` ids probe the full corpus.
 
     The query side is bounded and tiny; the corpus never shuffles until
     the per-query top-k, which ranks on (rounded cosine DESC, id ASC)
-    for determinism.
-
-    ``kernel`` picks the scoring engine (round 10; bit-identical results,
-    pinned by tests/test_round10_kernels.py):
-
-    - ``"fold"``: pure-DataFrame broadcast join + per-pair higher-order
-      fold.  The non-equi ``q_id != cand_id`` condition plans as
-      BroadcastNestedLoopJoin, which Spark does NOT whole-stage-codegen,
-      so EVERYTHING in that stage — fold or unrolled arithmetic alike —
-      runs interpreted (~40 s on a 200k x 20 sweep; an unrolled 20 x
-      64-term literal projection also breaks janino's 64 KB method cap).
-      Keep for generic/ragged widths and as the parity anchor.
-    - ``"arrow"``: mapInPandas over corpus batches with the query matrix
-      in the closure — the canonical dense-numeric Arrow case (same
-      policy as clustering.assign_clusters_batched).  The numpy kernel
-      accumulates SCALAR-SEQUENTIALLY across the dim index (one fused
-      multiply-add per element index, vectorized across rows), so every
-      double is bit-identical to the fold and to DuckDB's
-      ``list_dot_product``; rounding stays Spark-side.  ~10x the fold at
-      the sf10 decade, linear in N with a tiny constant: the plan a
-      1000-executor sweep of 100 TB wants.
+    for determinism.  ``kernel`` follows the fold/Arrow contract of
+    ``kernels.use_arrow``; the scorers are :func:`_cosine_scores` (fold)
+    and :func:`_cosine_scores_arrow`.
 
     ``snap6=True`` replaces ``round(cosine, 6)`` with :func:`snap_expr`
     (the engine-portable floor snap — see its docstring for the engine
@@ -139,60 +121,91 @@ def brute_force_topk(
     selection trace); the default keeps the established round(…, 6)
     output the cosine-top-k oracles pin.
     """
-    if kernel not in ("arrow", "fold"):
-        # a typo'd kernel must not silently take the ~10x-slower fold path
-        # (ADVICE r13)
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel!r}")
-    if kernel == "arrow":
-        scored = _brute_force_scores_arrow(df, id_col, vec_col, n_queries)
-        raw = F.col("_raw_cosine")
-        sim = snap_expr(raw, 6) if snap6 else F.round(raw, 6)
-        scored = scored.filter(F.col("q_id") != F.col("cand_id")).select(
-            "q_id", "cand_id", sim.alias("cosine")
-        )
-    else:
-        corpus = with_norm(
-            df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv")),
-            "cv",
-        ).withColumnRenamed("norm", "cnorm")
-        queries = with_norm(
-            df.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("qv"))
-            .filter(F.col("q_id") < n_queries),
-            "qv",
-        ).withColumnRenamed("norm", "qnorm")
-        raw = dot_expr("qv", "cv") / (F.col("qnorm") * F.col("cnorm"))
-        sim = snap_expr(raw, 6) if snap6 else F.round(raw, 6)
-        scored = (
-            F.broadcast(queries)
-            .join(corpus, F.col("q_id") != F.col("cand_id"))
-            .select("q_id", "cand_id", sim.alias("cosine"))
-        )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
+    raw = F.col("_raw_cosine")
+    sim = snap_expr(raw, 6) if snap6 else F.round(raw, 6)
+    scored = _cosine_scores(df, id_col, vec_col, n_queries, quantize=False, kernel=kernel)
+    return _top_k(scored.select("q_id", "cand_id", sim.alias("cosine")), "cosine", k)
+
+
+def _top_k(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Per-query ``rank`` on (score DESC, cand_id ASC), kept to ``k``."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score_col), F.asc("cand_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("int"))
         .filter(F.col("rank") <= k)
     )
 
 
-def _brute_force_scores_arrow(
-    df: DataFrame, id_col: str, vec_col: str, n_queries: int
+def _cosine_scores(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_queries: int,
+    *,
+    quantize: bool,
+    kernel: str,
 ) -> DataFrame:
-    """(q_id, cand_id, _raw_cosine) for every (query, corpus) pair via a
-    batched numpy kernel; see :func:`brute_force_topk` ``kernel="arrow"``.
+    """(q_id, cand_id, _raw_cosine) for every pair of a query (id below
+    ``n_queries``) and a different corpus vector, unrounded; ``quantize``
+    scores the int8 codes of :func:`quantize_vec`.
 
-    Accumulation contract: dots and norms fold scalar-sequentially across
-    the dim index in float64 (``acc += V[:, i] * q[i]``), and the cosine
-    is ``dot / (qnorm * cnorm)`` with the same operand order as the fold
-    path — bit-identical doubles, so the Spark-side round/snap emits the
-    same value-hash the DuckDB oracle computes.  Per-batch work is
-    row-local; batch boundaries cannot affect results."""
+    Fold plan: broadcast join + per-pair higher-order fold.  The non-equi
+    ``q_id != cand_id`` condition plans as BroadcastNestedLoopJoin, which
+    Spark does NOT whole-stage-codegen, so every fold in that stage runs
+    interpreted (~40 s on a 200k x 20 sweep; an unrolled 20 x 64-term
+    literal projection also breaks janino's 64 KB method cap) — the
+    reason ``"auto"`` takes :func:`_cosine_scores_arrow`."""
+    if use_arrow(kernel, df.schema[id_col].dataType):
+        return _cosine_scores_arrow(df, id_col, vec_col, n_queries, quantize)
+    vec = quantize_vec(vec_col) if quantize else F.col(vec_col)
+    corpus = df.select(F.col(id_col).alias("cand_id"), vec.alias("cv"))
+    queries = df.select(F.col(id_col).alias("q_id"), vec.alias("qv")).filter(
+        F.col("q_id") < n_queries
+    )
+    corpus = corpus.withColumn("cnorm", F.sqrt(norm_sq_expr("cv")))
+    queries = queries.withColumn("qnorm", F.sqrt(norm_sq_expr("qv")))
+    raw = dot_expr("qv", "cv") / (F.col("qnorm") * F.col("cnorm"))
+    return (
+        F.broadcast(queries)
+        .join(corpus, F.col("q_id") != F.col("cand_id"))
+        .select("q_id", "cand_id", raw.alias("_raw_cosine"))
+    )
+
+
+def _cosine_scores_arrow(
+    df: DataFrame, id_col: str, vec_col: str, n_queries: int, quantize: bool
+) -> DataFrame:
+    """Arrow twin of :func:`_cosine_scores`: ``mapInPandas`` over corpus
+    batches with the (bounded, collected) query matrix in the closure.
+
+    Bit-exactness: dots and norms fold scalar-sequentially across the dim
+    index in float64 (``acc += V[:, i] * q[i]``) and the cosine is
+    ``dot / (qnorm * cnorm)`` with the fold's operand order, so every
+    double matches the fold and DuckDB's ``list_dot_product``.  With
+    ``quantize`` the codes come from the same three IEEE-double operations
+    :func:`quantize_vec` evaluates (``m = max|x|``, ``s = 127/m`` or 0,
+    ``floor(x*s + 0.5)``), and integer dots are exact in any order.
+    A zero vector's 0/0 is NaN here, which the pandas → Arrow exchange
+    turns into the NULL the fold's division returns.  NULL
+    candidate ids are dropped Spark-side, as the fold's ``q_id != cand_id``
+    drops them; the query filter ``q_id < n_queries`` drops NULL queries."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
+    def as_scored(v: "np.ndarray") -> "np.ndarray":
+        if not quantize:
+            return v
+        m = np.abs(v).max(axis=1)
+        scale = np.zeros_like(m)
+        nz = m > 0
+        scale[nz] = 127.0 / m[nz]
+        return np.floor(v * scale[:, None] + 0.5)
+
+    id_type = df.schema[id_col].dataType
     out_schema = StructType(
         [
-            StructField("q_id", LongType()),
-            StructField("cand_id", LongType()),
+            StructField("q_id", id_type),
+            StructField("cand_id", id_type),
             StructField("_raw_cosine", DoubleType()),
         ]
     )
@@ -203,17 +216,16 @@ def _brute_force_scores_arrow(
         .collect()
     )
     if not qrows:
-        # no ids below n_queries: the fold path returns an empty relation,
-        # so the kernel must too instead of crashing np.stack (ADVICE r13)
-        return local_relation(df.sparkSession, [], out_schema)
-    q_ids = np.array([int(r.q_id) for r in qrows], dtype=np.int64)
-    qm = np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows])
+        # no ids below n_queries: an empty relation, as from the fold
+        ids = [F.col(id_col).alias("q_id"), F.col(id_col).alias("cand_id")]
+        return df.select(*ids, F.lit(None).cast("double").alias("_raw_cosine")).limit(0)
+    q_ids = np.array([r.q_id for r in qrows], dtype=np.int64)
+    qm = as_scored(np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows]))
     d = qm.shape[1]
     qnorm = np.zeros(qm.shape[0])
     for i in range(d):
         qnorm += qm[:, i] * qm[:, i]
     qnorm = np.sqrt(qnorm)
-    base = df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_v"))
 
     def score(batches):
         import pandas as pd
@@ -221,9 +233,7 @@ def _brute_force_scores_arrow(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            v = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["_v"]]
-            )  # (n, d)
+            v = as_scored(np.stack([np.asarray(x, dtype=np.float64) for x in pdf["_v"]]))
             n = v.shape[0]
             dots = np.zeros((n, qm.shape[0]))
             cnorm = np.zeros(n)
@@ -231,17 +241,22 @@ def _brute_force_scores_arrow(
                 dots += v[:, i, None] * qm[None, :, i]
                 cnorm += v[:, i] * v[:, i]
             cnorm = np.sqrt(cnorm)
-            cos = dots / (qnorm[None, :] * cnorm[:, None])
-            cand = pdf["cand_id"].to_numpy(dtype=np.int64)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                cos = dots / (qnorm[None, :] * cnorm[:, None])
             yield pd.DataFrame(
                 {
                     "q_id": np.tile(q_ids, n),
-                    "cand_id": np.repeat(cand, qm.shape[0]),
+                    "cand_id": np.repeat(pdf["cand_id"].to_numpy(), qm.shape[0]),
                     "_raw_cosine": cos.reshape(-1),
                 }
             )
 
-    return base.mapInPandas(score, schema=out_schema)
+    base = df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_v"))
+    return (
+        base.filter(F.col("cand_id").isNotNull())
+        .mapInPandas(score, schema=out_schema)
+        .filter(F.col("q_id") != F.col("cand_id"))
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -447,11 +462,7 @@ def lsh_bucketed_ann(
         .select("q_id", "cand_id", sim.alias("cosine"))
         .dropDuplicates(["q_id", "cand_id"])
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, "cosine", k)
 
 
 def derive_n_bits(
@@ -551,11 +562,7 @@ def knn_join(
         .filter(F.col("q_id") != F.col("cand_id"))
         .select("q_id", "cand_id", sim.alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -629,11 +636,7 @@ def ivf_bucketed_ann(
         .filter(F.col("q_id") != F.col("cand_id"))
         .select("q_id", "cand_id", sim.alias("cosine"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, "cosine", k)
 
 
 # ---------------------------------------------------------------------------
@@ -664,148 +667,19 @@ def quantized_topk(
     *,
     k: int = 5,
     n_queries: int = 20,
-    kernel: str = "arrow",
+    kernel: str = "auto",
 ) -> DataFrame:
     """Cosine top-k over int8-quantized vectors — same contract as
     ``brute_force_topk`` (bounded query side probes the corpus, per-query
-    row_number) but every dot product runs on exact small-integer doubles.
+    row_number, ``kernel`` per ``kernels.use_arrow``) but every dot product
+    runs on exact small-integer doubles.
 
     Quantized cosine is deterministic and engine-portable (integers sum
     exactly), so unlike raw-float ANN variants this one carries a full
-    DuckDB oracle.
-
-    ``kernel`` picks the scoring engine (round 13, same policy and
-    bit-exactness contract as ``brute_force_topk``):
-
-    - ``"arrow"`` (default): mapInPandas over corpus batches with the
-      quantized query matrix in the closure — the dense-numeric Arrow
-      case.  Quantization is three IEEE-double ops per element
-      (``127/max|x|`` scale, ``floor(x*s + 0.5)``) evaluated identically
-      by numpy and the JVM, and every quantized value is an exact small
-      integer, so dots/norms are exact regardless of accumulation order
-      (the kernel still folds scalar-sequentially across the dim index,
-      matching the fold path's contract); rounding stays Spark-side.
-    - ``"fold"``: the pure-DataFrame broadcast join + per-pair
-      higher-order fold.  The non-equi ``q_id != cand_id`` condition
-      plans as BroadcastNestedLoopJoin — never codegen'd, every
-      quantize/dot fold interpreted per pair (~2 s at sf0.1's 20k×20
-      sweep vs ~0.4 s for the kernel).  Kept as the parity anchor
-      (tests/test_round13_opt.py pins bit-identity)."""
-    if kernel not in ("arrow", "fold"):
-        # a typo'd kernel must not silently take the ~10x-slower fold path
-        # (ADVICE r13)
-        raise ValueError(f"kernel must be 'arrow' or 'fold', got {kernel!r}")
-    if kernel == "arrow":
-        scored = _quantized_scores_arrow(df, id_col, vec_col, n_queries)
-        scored = scored.filter(F.col("q_id") != F.col("cand_id")).select(
-            "q_id",
-            "cand_id",
-            F.round(F.col("_raw_cosine"), 6).alias("q_cosine"),
-        )
-    else:
-        q = df.select(
-            F.col(id_col).alias("q_id"), quantize_vec(vec_col).alias("qv")
-        ).filter(F.col("q_id") < n_queries)
-        c = df.select(F.col(id_col).alias("cand_id"), quantize_vec(vec_col).alias("cv"))
-        q = q.withColumn("qnorm", F.sqrt(norm_sq_expr("qv")))
-        c = c.withColumn("cnorm", F.sqrt(norm_sq_expr("cv")))
-        sim = F.round(dot_expr("qv", "cv") / (F.col("qnorm") * F.col("cnorm")), 6)
-        scored = (
-            F.broadcast(q)
-            .join(c, F.col("q_id") != F.col("cand_id"))
-            .select("q_id", "cand_id", sim.alias("q_cosine"))
-        )
-    w = Window.partitionBy("q_id").orderBy(F.desc("q_cosine"), F.asc("cand_id"))
-    return scored.withColumn("rank", F.row_number().over(w).cast("int")).filter(
-        F.col("rank") <= k
-    )
-
-
-def _quantized_scores_arrow(
-    df: DataFrame, id_col: str, vec_col: str, n_queries: int
-) -> DataFrame:
-    """(q_id, cand_id, _raw_cosine) for every (query, corpus) pair over
-    int8-QUANTIZED vectors via the batched numpy kernel; see
-    :func:`quantized_topk` ``kernel="arrow"``.
-
-    Bit-exactness: quantization (``m = max|x|``, ``s = 127/m`` or 0,
-    ``q_i = floor(x_i*s + 0.5)``) is the same three correctly-rounded
-    IEEE-double operations :func:`quantize_vec` evaluates — float32
-    inputs widen exactly, so the integer codes are identical.  Dots and
-    norms over the codes are EXACT (products ≤ 127²·dim, integer sums in
-    float64), and the cosine is ``dot / (qnorm * cnorm)`` with the fold
-    path's operand order.  The query matrix is a bounded head collect
-    (``n_queries`` rows — the established index-time pattern of
-    ``_brute_force_scores_arrow``)."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    def _quantize_rows(v: "np.ndarray") -> "np.ndarray":
-        m = np.abs(v).max(axis=1)
-        scale = np.zeros_like(m)
-        nz = m > 0
-        scale[nz] = 127.0 / m[nz]
-        return np.floor(v * scale[:, None] + 0.5)
-
-    out_schema = StructType(
-        [
-            StructField("q_id", LongType()),
-            StructField("cand_id", LongType()),
-            StructField("_raw_cosine", DoubleType()),
-        ]
-    )
-    qrows = (
-        df.select(
-            F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("qv")
-        )
-        .filter(F.col("q_id") < n_queries)
-        .orderBy("q_id")
-        .collect()
-    )
-    if not qrows:
-        # no ids below n_queries: the fold path returns an empty relation,
-        # so the kernel must too instead of crashing np.stack (ADVICE r13)
-        return local_relation(df.sparkSession, [], out_schema)
-    q_ids = np.array([int(r.q_id) for r in qrows], dtype=np.int64)
-    qm = _quantize_rows(np.stack([np.asarray(r.qv, dtype=np.float64) for r in qrows]))
-    d = qm.shape[1]
-    qnorm = np.zeros(qm.shape[0])
-    for i in range(d):
-        qnorm += qm[:, i] * qm[:, i]
-    qnorm = np.sqrt(qnorm)
-    base = df.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_v"))
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = _quantize_rows(
-                np.stack([np.asarray(x, dtype=np.float64) for x in pdf["_v"]])
-            )  # (n, d) integer codes
-            n = v.shape[0]
-            dots = np.zeros((n, qm.shape[0]))
-            cnorm = np.zeros(n)
-            for i in range(d):
-                dots += v[:, i, None] * qm[None, :, i]
-                cnorm += v[:, i] * v[:, i]
-            cnorm = np.sqrt(cnorm)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                # zero-norm (all-zero) vectors produce NaN/inf cosines in
-                # IEEE arithmetic — exactly what the JVM fold path emits;
-                # only the warning is suppressed, never the value
-                cos = dots / (qnorm[None, :] * cnorm[:, None])
-            cand = pdf["cand_id"].to_numpy(dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "q_id": np.tile(q_ids, n),
-                    "cand_id": np.repeat(cand, qm.shape[0]),
-                    "_raw_cosine": cos.reshape(-1),
-                }
-            )
-
-    return base.mapInPandas(score, schema=out_schema)
+    DuckDB oracle."""
+    scored = _cosine_scores(df, id_col, vec_col, n_queries, quantize=True, kernel=kernel)
+    sim = F.round(F.col("_raw_cosine"), 6).alias("q_cosine")
+    return _top_k(scored.select("q_id", "cand_id", sim), "q_cosine", k)
 
 
 def random_projection(

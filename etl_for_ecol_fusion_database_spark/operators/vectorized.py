@@ -23,70 +23,6 @@ from pyspark.sql.functions import pandas_udf
 _UDF_CACHE: dict[str, object] = {}
 
 
-def nullable_int_dtype(spark_type) -> str | None:
-    """Pandas masked extension dtype for a Spark integral type, else None.
-
-    The Arrow → pandas conversion inside ``mapInPandas``/``applyInPandas``
-    materializes an integer column that contains ANY null as float64
-    (NaN) or object — so a kernel that round-trips ids via ``.to_numpy()``
-    or ``pd.Series(..., dtype=pdf['id'].dtype)`` either fails the cast
-    back to the declared integer schema or silently diverges from the fold
-    plans, which handle null ids natively.  ``series.astype()`` to this
-    dtype (Int8/Int16/Int32/Int64) keeps null ids null end-to-end.
-
-    Caveat (inherent to the pandas exchange, not fixable here): in a batch
-    that mixes nulls with ids of magnitude ≥ 2^53, the non-null ids have
-    already transited float64 before the kernel sees them.  Synthetic ids
-    that large don't occur in any registered pipeline; fold paths remain
-    the refuge for such data (``kernel="fold"``).  Kernels must cast
-    through :func:`checked_id_series`, which turns that caveat from a
-    docstring convention into a loud error (ADVICE r12)."""
-    return _NULLABLE_INT_DTYPE.get(type(spark_type))
-
-
-#: largest magnitude float64 represents exactly for every integer
-_FLOAT64_EXACT_MAX = 2 ** 53
-
-
-def checked_id_series(raw: pd.Series, dtype: str | None) -> pd.Series:
-    """Cast an Arrow-exchanged id column to its masked extension ``dtype``,
-    REFUSING silent float64 precision loss (ADVICE r12).
-
-    When a batch mixes NULL ids with large ids, Arrow → pandas materializes
-    the column as float64; any id of magnitude ≥ 2^53 has then already lost
-    precision before the kernel sees it, and ``astype('Int64')`` would
-    launder the damaged value back into an exact-looking integer.  The
-    guard fires only when the column actually transited float (a batch
-    with no nulls arrives as int64 and skips the scan), and directs the
-    caller to the fold plan, which handles such ids natively."""
-    if dtype is None:
-        return raw
-    if raw.dtype.kind == "f":
-        vals = raw.to_numpy()
-        finite = np.isfinite(vals)
-        if finite.any() and np.abs(vals[finite]).max() >= _FLOAT64_EXACT_MAX:
-            raise ValueError(
-                "id column transited float64 (batch mixes nulls with ids of "
-                "magnitude >= 2^53): non-null ids may have lost precision "
-                "before the kernel ran — use kernel='fold' for this data"
-            )
-    return raw.astype(dtype)
-
-
-def _build_nullable_map():
-    from pyspark.sql import types as T
-
-    return {
-        T.ByteType: "Int8",
-        T.ShortType: "Int16",
-        T.IntegerType: "Int32",
-        T.LongType: "Int64",
-    }
-
-
-_NULLABLE_INT_DTYPE = _build_nullable_map()
-
-
 def _dot_pandas():
     """Arrow-batched dot product UDF (built lazily — pandas_udf needs an
     active SparkSession to resolve its return type)."""

@@ -1054,19 +1054,7 @@ def x3_profile_sketch(spark, sf_dir):
     #   for one extra single-column pruned scan (the cheaper trade at
     #   scale: Expand doubles ROWS, the scan reads one column;
     #   fresh-session alternating A/B at sf0.1: 3.4 vs 3.9 s medians).
-    # SPARK_GRAFT_PROFILE_SKETCH selects the recombination for the
-    # committed A/B instrument (scripts/ab_probe.py — VERDICT r13 item #1
-    # asked for a clean idle driver-protocol comparison of the r13 split
-    # form against the r12 Expand form).  Values: "split" (default, the
-    # r13 shape above), "expand" (r12: both exact distincts in ONE
-    # aggregate — RewriteDistinctAggregates plans an Expand), "merged3"
-    # (split distincts, but sketches+percentiles share one aggregate —
-    # neither is a distinct aggregate, so still no Expand, one fewer
-    # scan).  All three compute identical values (oracle-checked).
-    import os as _os
-
-    _variant = _os.environ.get("SPARK_GRAFT_PROFILE_SKETCH", "split").strip().lower()
-    _pct_cols = [
+    pct_cols = [
         F.expr("percentile(CAST(l_quantity AS DOUBLE), 0.5)").alias("qty_exact"),
         F.percentile_approx(F.col("l_quantity").cast("double"), F.lit(0.5), F.lit(10000))
         .cast("double")
@@ -1078,41 +1066,17 @@ def x3_profile_sketch(spark, sf_dir):
         .cast("double")
         .alias("price_approx"),
     ]
-    _sketch_cols = [
+    sketch_cols = [
         F.approx_count_distinct("l_orderkey", 0.02).cast("double").alias("orders_approx"),
         F.approx_count_distinct("l_partkey", 0.02).cast("double").alias("parts_approx"),
     ]
-    if _variant == "expand":
-        cards = l.agg(
-            F.countDistinct("l_orderkey").cast("double").alias("orders_exact"),
-            F.countDistinct("l_partkey").cast("double").alias("parts_exact"),
-        )
-        sketches = l.agg(*_sketch_cols)
-        pcts = l.agg(*_pct_cols)
-        agg = cards.crossJoin(F.broadcast(sketches)).crossJoin(F.broadcast(pcts))
-    elif _variant == "merged3":
-        o_cards = l.agg(
-            F.countDistinct("l_orderkey").cast("double").alias("orders_exact")
-        )
-        p_cards = l.agg(
-            F.countDistinct("l_partkey").cast("double").alias("parts_exact")
-        )
-        rest = l.agg(*_sketch_cols, *_pct_cols)
-        agg = o_cards.crossJoin(F.broadcast(p_cards)).crossJoin(F.broadcast(rest))
-    else:
-        o_cards = l.agg(
-            F.countDistinct("l_orderkey").cast("double").alias("orders_exact")
-        )
-        p_cards = l.agg(
-            F.countDistinct("l_partkey").cast("double").alias("parts_exact")
-        )
-        sketches = l.agg(*_sketch_cols)
-        pcts = l.agg(*_pct_cols)
-        agg = (
-            o_cards.crossJoin(F.broadcast(p_cards))
-            .crossJoin(F.broadcast(sketches))
-            .crossJoin(F.broadcast(pcts))
-        )
+    o_cards = l.agg(F.countDistinct("l_orderkey").cast("double").alias("orders_exact"))
+    p_cards = l.agg(F.countDistinct("l_partkey").cast("double").alias("parts_exact"))
+    agg = (
+        o_cards.crossJoin(F.broadcast(p_cards))
+        .crossJoin(F.broadcast(l.agg(*sketch_cols)))
+        .crossJoin(F.broadcast(l.agg(*pct_cols)))
+    )
     unpivoted = agg.select(
         F.expr(
             "stack(4, "

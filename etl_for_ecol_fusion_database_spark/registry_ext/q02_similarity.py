@@ -56,18 +56,12 @@ SELECT q_id, cand_id, cosine, rank FROM ranked WHERE rank <= 5
 """,
 )
 def x2_cosine_topk(spark, sf_dir):
-    """X2 brute-force cosine top-k (exact ANN baseline): 20 broadcast query
-    vectors against the full corpus, JVM-side double fold for the dot
-    product, per-query top-5 on (cosine DESC, cand_id)."""
+    """X2 brute-force cosine top-k (exact ANN baseline): 20 query vectors
+    against the full corpus, double-precision dot product in the fold's
+    order (Arrow kernel by default), per-query top-5 on (cosine DESC,
+    cand_id)."""
     return similarity.brute_force_topk(
-        _t(spark, sf_dir, "embeddings"),
-        k=5,
-        n_queries=20,
-        # Arrow kernel (round 10): the non-equi broadcast join plans as
-        # BroadcastNestedLoopJoin, which whole-stage codegen skips — the
-        # per-pair fold ran interpreted and dominated the sf10 panel cell.
-        # Bit-identical to the fold path (pinned); rounding stays Spark-side.
-        kernel="arrow",
+        _t(spark, sf_dir, "embeddings"), k=5, n_queries=20
     )
 
 

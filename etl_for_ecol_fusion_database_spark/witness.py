@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import ast
 import hashlib
+import importlib
 import inspect
 import json
 import os
@@ -360,6 +361,17 @@ def _module_attr_use(
     return out
 
 
+def _import_or_none(modname: str) -> types.ModuleType | None:
+    """``modname``, imported if this process has not loaded it yet — so a
+    query's fingerprint does not depend on which modules happened to be
+    imported before it was computed (a fresh process and a test
+    session must agree) — or None when the import fails."""
+    try:
+        return importlib.import_module(modname)
+    except Exception:
+        return None
+
+
 def _collect_module_narrowed(
     modname: str,
     accessed: frozenset[str] | None,
@@ -374,11 +386,9 @@ def _collect_module_narrowed(
         for h in _module_closure_hashes(modname):
             parts.add("mod:" + h)
         return
-    import sys as _sys
-
-    mod = _sys.modules.get(modname)
+    mod = _import_or_none(modname)
     if mod is None:
-        # not imported in this process — can't resolve attrs; coarse hash
+        # unimportable — can't resolve attrs; coarse hash
         for h in _module_closure_hashes(modname):
             parts.add("mod:" + h)
         return
@@ -435,12 +445,10 @@ def _collect_fn_refs(
             )
         else:
             _collect(sub, parts, visited, depth + 1)
-    import sys as _sys
-
     for alias, spec in imports.items():
         if ":" in spec:
             modname, attr = spec.split(":", 1)
-            mod = _sys.modules.get(modname)
+            mod = _import_or_none(modname)
             target = getattr(mod, attr, _MISSING) if mod else _MISSING
             if target is _MISSING:
                 _collect_module_narrowed(modname, None, parts, visited, depth)
@@ -453,6 +461,53 @@ def _collect_fn_refs(
 
 
 _MISSING = object()
+
+
+_EMPTY_INIT_MEMO: dict[str, frozenset[str]] = {}
+
+
+def _empty_initialized(modname: str) -> frozenset[str]:
+    """Names ``modname`` binds at module level to an empty dict, list or
+    set literal — runtime caches (memos, temp-dir registries) that code
+    fills as queries run, not configuration."""
+    got = _EMPTY_INIT_MEMO.get(modname)
+    if got is None:
+        path = _module_file(modname)
+        names: set[str] = set()
+        for node in ast.parse(open(path, "rb").read()).body if path else []:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign):
+                targets, value = [node.target], node.value
+            else:
+                continue
+            empty = (
+                (isinstance(value, ast.Dict) and not value.keys)
+                or (isinstance(value, (ast.List, ast.Set)) and not value.elts)
+                or (
+                    isinstance(value, ast.Call)
+                    and isinstance(value.func, ast.Name)
+                    and value.func.id in ("dict", "list", "set")
+                    and not value.args
+                    and not value.keywords
+                )
+            )
+            if empty:
+                names.update(t.id for t in targets if isinstance(t, ast.Name))
+        got = _EMPTY_INIT_MEMO[modname] = frozenset(names)
+    return got
+
+
+def _is_runtime_cache(obj: object) -> bool:
+    """Whether ``obj`` is a package module's empty-initialized container."""
+    import sys as _sys
+
+    for modname, mod in list(_sys.modules.items()):
+        if not _is_pkg_module(mod):
+            continue
+        if any(getattr(mod, n, None) is obj for n in _empty_initialized(modname)):
+            return True
+    return False
 
 
 def _collect(obj: object, parts: set[str], visited: set[int], depth: int) -> None:
@@ -485,7 +540,11 @@ def _collect(obj: object, parts: set[str], visited: set[int], depth: int) -> Non
         return
     if isinstance(obj, (set, frozenset, tuple, list, dict)):
         try:
-            parts.add("val:" + _stable_repr(obj))
+            # a runtime cache hashes as the empty value it starts from, so
+            # whatever earlier queries memoized in it cannot move a
+            # fingerprint (a fresh process and a test session agree)
+            value = type(obj)() if _is_runtime_cache(obj) else obj
+            parts.add("val:" + _stable_repr(value))
         except Exception:
             pass
 

@@ -553,22 +553,6 @@ def test_bpe_encode_hypothesis_vs_reference(spark):
         assert "".join(got[w]) == w
 
 
-def test_scrub_duplicated_spans_kernel_parity(spark):
-    """scrub(kernel='fold') == scrub(kernel='arrow') — the surgery sits on
-    top of the span finder's kernel dispatch, so the parity the finder
-    pins must survive the interval merge and substring fold."""
-    docs = load_table(spark, SF_CORRECT, "documents")
-
-    def nsort(rows):
-        return sorted(rows, key=lambda t: [(v is None, v) for v in t])
-
-    fold = nsort(map(tuple, dedup.scrub_duplicated_spans(
-        docs, min_span=150, kernel="fold").collect()))
-    arrow = nsort(map(tuple, dedup.scrub_duplicated_spans(
-        docs, min_span=150, kernel="arrow").collect()))
-    assert fold == arrow and len(fold) == 500
-
-
 def test_bpe_budget_pack_shard_invariants(spark):
     """Shard assembly invariants for the BPE-aware packing: shard ids are
     dense and monotone in doc order, every doc's exclusive prefix lands

@@ -1,13 +1,8 @@
-"""Round-10 kernel parity pins.
-
-The sf10 panel showed the interpreted higher-order fold dominating the
-pair-scoring heads (BroadcastNestedLoopJoin stages are never
-whole-stage-codegen'd), so x2_cosine_topk moved to the Arrow kernel
-(brute_force_topk(kernel="arrow")).  The kernel's contract is
-BIT-IDENTICAL doubles — scalar-sequential accumulation across the dim
-index, same operand order for the norm product — so the registered
-query keeps its exact DuckDB value-hash.  These tests pin that
-contract the way test_round7_parity.py pins the portable twins.
+"""Round-10 kernel pins outside the fold/Arrow twin matrix
+(tests/test_kernel_parity.py): the matmul-pruned cluster assignment on
+adversarial ties, the hierarchical assignment at full probes, the
+weighted count-min build, the id-cast guard of ``kernels``, and LSH
+band validation.
 """
 
 from __future__ import annotations
@@ -15,73 +10,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_for_ecol_fusion_database_spark.catalog import load_table
-from etl_for_ecol_fusion_database_spark.operators import similarity
 
 SF_CORRECT = "/root/testdata/sf0.01"
 
-
-def test_brute_force_arrow_kernel_bit_identical_to_fold(spark):
-    """Full top-k output equality (ids, ranks, AND rounded cosines) between
-    the Arrow kernel and the pure-DataFrame fold path — any accumulation
-    -order drift in the numpy kernel shows up here as a rounded-cosine
-    mismatch."""
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    fold = similarity.brute_force_topk(emb, k=5, n_queries=20, kernel="fold")
-    arrow = similarity.brute_force_topk(emb, k=5, n_queries=20, kernel="arrow")
-    assert fold.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(fold).count() == 0
-
-
-def test_brute_force_arrow_kernel_raw_doubles_identical(spark):
-    """Stronger than the rounded pin: the RAW cosine doubles must match the
-    fold's bit for bit (joined on the pair key, compared unrounded) — the
-    round-6 projection can mask up to 5e-7 of drift, which is exactly the
-    kind of latent divergence that would surface as a hash flap on a new
-    fixture."""
-    emb = load_table(spark, SF_CORRECT, "embeddings").limit(300)
-    corpus = similarity.with_norm(
-        emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("cv")),
-        "cv",
-    ).withColumnRenamed("norm", "cnorm")
-    queries = similarity.with_norm(
-        emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
-        .filter(F.col("q_id") < 8),
-        "qv",
-    ).withColumnRenamed("norm", "qnorm")
-    fold_raw = (
-        F.broadcast(queries)
-        .join(corpus, F.col("q_id") != F.col("cand_id"))
-        .select(
-            "q_id",
-            "cand_id",
-            (
-                similarity.dot_expr("qv", "cv")
-                / (F.col("qnorm") * F.col("cnorm"))
-            ).alias("raw_fold"),
-        )
-    )
-    arrow_raw = similarity._brute_force_scores_arrow(
-        emb, "vec_id", "embedding", 8
-    ).filter(F.col("q_id") != F.col("cand_id"))
-    both = fold_raw.join(arrow_raw, ["q_id", "cand_id"])
-    n = both.count()
-    assert n == 8 * 299
-    mismatched = both.filter(F.col("raw_fold") != F.col("_raw_cosine")).count()
-    assert mismatched == 0
-
-
-def test_brute_force_arrow_kernel_snap6_path(spark):
-    """snap6 stays Spark-side for both kernels (mmr's cascade guard), so
-    the snapped outputs must agree too."""
-    emb = load_table(spark, SF_CORRECT, "embeddings").limit(200)
-    fold = similarity.brute_force_topk(
-        emb, k=3, n_queries=5, snap6=True, kernel="fold"
-    )
-    arrow = similarity.brute_force_topk(
-        emb, k=3, n_queries=5, snap6=True, kernel="arrow"
-    )
-    assert fold.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(fold).count() == 0
 
 def test_batched_assignment_adversarial_ties_match_jvm(spark):
     """The matmul-pruned assignment (round 10) must keep the fold
@@ -147,125 +78,6 @@ def test_hierarchical_full_probe_still_bit_identical_after_matmul(spark):
     assert hier == flat
 
 
-def test_semdedup_pair_kernels_identical(spark):
-    """semantic_dedup(pair_kernel='arrow') — groupBy(cluster).applyInPandas
-    with Spark-side round-6 decision — must emit exactly the fold join's
-    survivor set, including through the adaptive-k batched assignment."""
-    from etl_for_ecol_fusion_database_spark.operators import dedup as dedup_ops
-
-    emb = load_table(spark, SF_CORRECT, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    seeds = [
-        list(r.v) for r in emb.filter(F.col("vec_id") < 40).orderBy("vec_id").collect()
-    ]
-    fold = sorted(
-        map(
-            tuple,
-            dedup_ops.semantic_dedup(
-                emb, seeds, id_col="vec_id", vec_col="v",
-                threshold=0.3, pair_kernel="fold",
-            ).collect(),
-        )
-    )
-    arrow = sorted(
-        map(
-            tuple,
-            dedup_ops.semantic_dedup(
-                emb, seeds, id_col="vec_id", vec_col="v",
-                threshold=0.3, pair_kernel="arrow",
-            ).collect(),
-        )
-    )
-    assert fold == arrow and len(fold) > 0
-
-def test_pq_encode_arrow_identical_to_fold_union(spark):
-    """pq_encode(kernel='arrow') — the single-pass Arrow encoder — must
-    emit exactly the JVM union plan's (id, subspace, code) set, including
-    first-min tie codes."""
-    from etl_for_ecol_fusion_database_spark.operators import clustering
-
-    emb = load_table(spark, SF_CORRECT, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    head = [
-        list(r.v)
-        for r in emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
-    ]
-    codebooks = [[head[c][j * 16 : (j + 1) * 16] for c in range(4)] for j in range(4)]
-    fold = sorted(
-        map(tuple, clustering.pq_encode(
-            emb, "vec_id", "v", codebooks, sub_dim=16, kernel="fold"
-        ).collect())
-    )
-    arrow = sorted(
-        map(tuple, clustering.pq_encode(
-            emb, "vec_id", "v", codebooks, sub_dim=16, kernel="arrow"
-        ).collect())
-    )
-    assert fold == arrow and len(fold) > 0
-
-
-def test_auto_dispatch_schema_and_id_type_safety(spark):
-    """Round-11 ADVICE pins: kernel='auto' may never change output schema
-    or id semantics vs the fold engines.
-
-    - integral non-bigint ids: the Arrow PQ encoder must preserve the id
-      column's own type (the r10 kernel hardcoded LongType, silently
-      widening int ids vs the fold union plan);
-    - non-integral ids: auto must fall back to the fold path (the Arrow
-      kernels round-trip/sort ids through numpy, which is neither
-      lossless nor Spark-collation-ordered for strings)."""
-    from etl_for_ecol_fusion_database_spark.operators import clustering
-    from etl_for_ecol_fusion_database_spark.operators import dedup as dedup_ops
-
-    emb = load_table(spark, SF_CORRECT, "embeddings").select(
-        F.col("vec_id").cast("int").alias("vec_id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    head = [
-        list(r.v)
-        for r in emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
-    ]
-    codebooks = [[head[c][j * 16 : (j + 1) * 16] for c in range(4)] for j in range(4)]
-
-    auto = clustering.pq_encode(emb, "vec_id", "v", codebooks, sub_dim=16)
-    fold = clustering.pq_encode(
-        emb, "vec_id", "v", codebooks, sub_dim=16, kernel="fold"
-    )
-    assert [f.dataType for f in auto.schema.fields] == [
-        f.dataType for f in fold.schema.fields
-    ], f"auto changed schema: {auto.schema} vs {fold.schema}"
-    assert sorted(map(tuple, auto.collect())) == sorted(map(tuple, fold.collect()))
-
-    # string ids: auto must produce the fold engines' exact rows (and in
-    # particular never crash in a numpy int64 round-trip)
-    emb_s = load_table(spark, SF_CORRECT, "embeddings").select(
-        F.concat(F.lit("doc-"), F.format_string("%05d", "vec_id")).alias("vec_id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    seeds = [
-        list(r.v)
-        for r in load_table(spark, SF_CORRECT, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .filter(F.col("vec_id") < 40).orderBy("vec_id").collect()
-    ]
-    auto_s = sorted(map(tuple, dedup_ops.semantic_dedup(
-        emb_s, seeds, id_col="vec_id", vec_col="v", threshold=0.3
-    ).collect()))
-    fold_s = sorted(map(tuple, dedup_ops.semantic_dedup(
-        emb_s, seeds, id_col="vec_id", vec_col="v", threshold=0.3,
-        pair_kernel="fold",
-    ).collect()))
-    assert auto_s == fold_s and len(auto_s) > 0
-
-    enc_s = clustering.pq_encode(emb_s, "vec_id", "v", codebooks, sub_dim=16)
-    enc_sf = clustering.pq_encode(
-        emb_s, "vec_id", "v", codebooks, sub_dim=16, kernel="fold"
-    )
-    assert sorted(map(tuple, enc_s.collect())) == sorted(map(tuple, enc_sf.collect()))
-
-
 def test_countmin_weighted_build_identical_to_occurrence_build(spark):
     """countmin_build_weighted over per-token counts must produce the
     exact counter table of the occurrence fold (counters are additive) —
@@ -288,112 +100,6 @@ def test_countmin_weighted_build_identical_to_occurrence_build(spark):
     assert direct == weighted and len(direct) > 0
 
 
-def _nsort(rows):
-    """Sort rows that may contain NULLs (None is not orderable vs int)."""
-    return sorted(rows, key=lambda t: [(v is None, v) for v in t])
-
-
-def test_arrow_kernels_null_id_parity(spark):
-    """Round-12 ADVICE pin: a batch containing NULL ids materializes the
-    pandas id column as float64/object, so a kernel that round-trips ids
-    via .to_numpy()/native-dtype Series either errors on the cast back to
-    the declared integer schema or diverges from the fold paths, which
-    handle null ids natively.  Each Arrow kernel must match its fold
-    engine row-for-row on a corpus that includes null-id rows:
-
-    - CDC chunker: the fold plan re-attaches text via an equi-join on id
-      (null-REJECTING), so null-id docs produce no chunks on either path;
-    - PQ encoder: the fold union projects null ids through with their
-      codes, so the kernel must carry them too;
-    - SemDeDup pair kernel: null-id rows pair with NOTHING (the fold
-      join's a.id < b.id is NULL-false) and survive the final anti-join.
-    """
-    from etl_for_ecol_fusion_database_spark.operators import clustering
-    from etl_for_ecol_fusion_database_spark.operators import dedup as dedup_ops
-
-    # --- CDC chunker ------------------------------------------------------
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog " * 30),
-            (None, "pack my box with five dozen liquor jugs " * 30),
-            (3, None),
-            (None, None),
-        ],
-        "doc_id long, text string",
-    )
-    fold = _nsort(map(tuple, dedup_ops.cdc_chunk_rows(docs, kernel="fold").collect()))
-    arrow = _nsort(map(tuple, dedup_ops.cdc_chunk_rows(docs, kernel="arrow").collect()))
-    assert fold == arrow and len(fold) > 4
-    assert not any(t[0] is None for t in arrow), "null-id docs join no text"
-
-    # --- PQ encoder + SemDeDup over embeddings with a null-id row --------
-    emb = load_table(spark, SF_CORRECT, "embeddings").select(
-        F.when(F.col("vec_id") % 37 == 5, F.lit(None))
-        .otherwise(F.col("vec_id"))
-        .alias("vec_id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    head = [
-        list(r.v)
-        for r in emb.filter(F.col("vec_id") < 4).orderBy("vec_id").collect()
-    ]
-    codebooks = [[head[c][j * 16 : (j + 1) * 16] for c in range(4)] for j in range(4)]
-    fold = _nsort(map(tuple, clustering.pq_encode(
-        emb, "vec_id", "v", codebooks, sub_dim=16, kernel="fold"
-    ).collect()))
-    arrow = _nsort(map(tuple, clustering.pq_encode(
-        emb, "vec_id", "v", codebooks, sub_dim=16, kernel="arrow"
-    ).collect()))
-    assert fold == arrow and len(fold) > 0
-    assert any(t[0] is None for t in arrow), "null-id codes must survive"
-
-    seeds = [
-        list(r.v) for r in emb.filter(F.col("vec_id") < 40).orderBy("vec_id").collect()
-    ]
-    fold = _nsort(map(tuple, dedup_ops.semantic_dedup(
-        emb, seeds, id_col="vec_id", vec_col="v",
-        threshold=0.3, pair_kernel="fold",
-    ).collect()))
-    arrow = _nsort(map(tuple, dedup_ops.semantic_dedup(
-        emb, seeds, id_col="vec_id", vec_col="v",
-        threshold=0.3, pair_kernel="arrow",
-    ).collect()))
-    assert fold == arrow and len(fold) > 0
-    assert any(t[0] is None for t in arrow), "null-id rows survive the anti-join"
-
-
-def test_duplicated_spans_kernels_identical(spark):
-    """duplicated_spans(kernel='arrow') — one sliding-window matmul per doc
-    — must emit exactly the fold plan's spans (same gear-polynomial hashes,
-    pure int64 arithmetic) across the parity traps: null ids (KEPT here —
-    no id equi-join in this operator), null/empty/short docs, astral
-    chars, and a real corpus slice."""
-    from etl_for_ecol_fusion_database_spark.operators import dedup as dedup_ops
-
-    def nsort(rows):
-        return sorted(rows, key=lambda t: [(v is None, v) for v in t])
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog " * 10),
-        (None, "the quick brown fox jumps over the lazy dog " * 10),
-        (3, None),
-        (4, ""),
-        (5, "short"),
-        (6, "ab\U00010348cdef " * 40),
-        (7, "ab\U00010348cdef " * 40),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fold = nsort(map(tuple, dedup_ops.duplicated_spans(docs, kernel="fold").collect()))
-    arrow = nsort(map(tuple, dedup_ops.duplicated_spans(docs, kernel="arrow").collect()))
-    assert fold == arrow and len(fold) >= 4
-    assert any(t[0] is None for t in arrow), "null-id spans must survive"
-
-    corpus = load_table(spark, SF_CORRECT, "documents")
-    fold = nsort(map(tuple, dedup_ops.duplicated_spans(corpus, kernel="fold").collect()))
-    arrow = nsort(map(tuple, dedup_ops.duplicated_spans(corpus, kernel="arrow").collect()))
-    assert fold == arrow and len(fold) > 100
-
-
 def test_checked_id_series_refuses_float_transit_precision_loss():
     """ADVICE r12: a batch mixing NULL ids with ids >= 2^53 arrives in the
     kernel as float64 — the precision loss already happened upstream, so
@@ -402,24 +108,24 @@ def test_checked_id_series_refuses_float_transit_precision_loss():
     import pandas as pd
     import pytest as _pytest
 
-    from etl_for_ecol_fusion_database_spark.operators import vectorized
+    from etl_for_ecol_fusion_database_spark import kernels
 
     # no-null batch arrives int64: exact, no guard needed
-    ok = vectorized.checked_id_series(pd.Series([1, 2, 3]), "Int64")
+    ok = kernels.checked_id_series(pd.Series([1, 2, 3]), "Int64")
     assert list(ok) == [1, 2, 3] and str(ok.dtype) == "Int64"
     # nulls force float64 transit but small magnitudes stay exact
-    small = vectorized.checked_id_series(
+    small = kernels.checked_id_series(
         pd.Series([1.0, None, 3.0], dtype="float64"), "Int64"
     )
     assert small.isna().tolist() == [False, True, False]
     # nulls + >= 2^53 magnitude: refuse
     with _pytest.raises(ValueError, match="2\\^53"):
-        vectorized.checked_id_series(
+        kernels.checked_id_series(
             pd.Series([float(2**53 + 2), None], dtype="float64"), "Int64"
         )
     # dtype=None passes through untouched (non-integral id columns)
     s = pd.Series(["a", None])
-    assert vectorized.checked_id_series(s, None) is s
+    assert kernels.checked_id_series(s, None) is s
 
 
 def test_bands_divide_rejects_uneven_banding():

@@ -1,16 +1,15 @@
 """Round-13 optimization parity pins.
 
-Three operators were restructured for the optimization round; each pin
+Two operators were restructured for the optimization round; each pin
 holds the NEW shape to the OLD shape's exact values so the registered
-queries keep their DuckDB value-hashes:
+queries keep their DuckDB value-hashes (``quantized_topk``'s Arrow
+kernel is pinned in tests/test_kernel_parity.py):
 
 - ``ngram_jaccard_pairs`` moved from quadratic ``array_intersect``/
   ``array_union`` under a BroadcastNestedLoopJoin to an inverted-index
   shingle equi-join with count-based Jaccard (guide §3.2).  The
   quadratic form survives as the ``threshold <= 0`` fallback, which
   doubles as the parity anchor here.
-- ``quantized_topk`` gained the Arrow batch kernel (default), mirroring
-  ``brute_force_topk(kernel="arrow")``; the fold path is the anchor.
 - ``connected_components`` collapsed each propagation round to one
   join + one groupBy via self-loop rows; the label fixpoint contract is
   already pinned by tests/test_curation_ops.py (known graph, long
@@ -24,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from etl_for_ecol_fusion_database_spark.catalog import load_table
-from etl_for_ecol_fusion_database_spark.operators import dedup, graph, similarity
+from etl_for_ecol_fusion_database_spark.operators import dedup, graph
 
 SF_CORRECT = "/root/testdata/sf0.01"
 
@@ -52,34 +51,6 @@ def test_ngram_jaccard_zero_threshold_keeps_disjoint_pairs(spark):
     got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
     assert set(got) == {(0, 1), (0, 2), (1, 2)}
     assert got[(0, 2)] == 0.0 and got[(1, 2)] == 0.0
-
-
-def test_quantized_topk_arrow_bit_identical_to_fold(spark):
-    """Full top-k output equality (ids, ranks, AND rounded cosines)
-    between the Arrow kernel and the fold path — quantization and
-    scoring are exact-integer arithmetic, so ANY mismatch is a kernel
-    contract violation, not float noise."""
-    emb = load_table(spark, SF_CORRECT, "embeddings")
-    fold = similarity.quantized_topk(emb, k=5, n_queries=20, kernel="fold")
-    arrow = similarity.quantized_topk(emb, k=5, n_queries=20, kernel="arrow")
-    assert fold.exceptAll(arrow).count() == 0
-    assert arrow.exceptAll(fold).count() == 0
-
-
-def test_quantized_topk_kernels_agree_on_zero_vectors(spark):
-    """An all-zero vector quantizes to zero codes and a zero norm; its
-    cosines are IEEE NaN on both engines and must survive identically
-    (rank order included) through round/window on both paths."""
-    rows = [
-        (0, [0.0] * 4),
-        (1, [1.0, 2.0, 3.0, 4.0]),
-        (2, [2.0, 4.0, 6.0, 8.0]),
-        (3, [-1.0, 0.5, 0.0, 2.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    fold = similarity.quantized_topk(df, k=3, n_queries=3, kernel="fold")
-    arrow = similarity.quantized_topk(df, k=3, n_queries=3, kernel="arrow")
-    assert sorted(map(tuple, fold.collect())) == sorted(map(tuple, arrow.collect()))
 
 
 def test_ngram_jaccard_equijoin_matches_quadratic_unigram_and_empty(spark):

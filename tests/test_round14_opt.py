@@ -1,8 +1,9 @@
 """Round-14 optimization pins.
 
-This round's changes are (a) the scan-rebalance loader for map-heavy
-queries on one-row-group fixture layouts (guide §2.5 input skew), and
-(b) the ADVICE-r13 hardening of the similarity kernel dispatch.  Pins:
+This round's changes are the scan-rebalance loader for map-heavy
+queries on one-row-group fixture layouts (guide §2.5 input skew) and
+the ADVICE-r13 hardening (its kernel-dispatch pins now live in
+tests/test_kernel_parity.py).  Pins:
 
 - ``load_table_rebalanced`` must be value-identical to ``load_table``
   (it only moves rows between partitions), must be a NO-OP when the file
@@ -11,10 +12,6 @@ queries on one-row-group fixture layouts (guide §2.5 input skew), and
   without a registered primary key;
 - ``effective_scan_parallelism`` reads row groups from footers (the
   quantity that bounds emitting scan tasks), with the early-exit cap;
-- unrecognized ``kernel`` values raise instead of silently taking the
-  ~10x interpreted fold path (ADVICE r13);
-- the arrow score kernels return an EMPTY relation (not an np.stack
-  crash) when no ids fall below ``n_queries`` (ADVICE r13);
 - ``connected_components`` collapses duplicate ``nodes`` rows (the r13
   groupBy dedup, now a documented contract).
 """
@@ -31,7 +28,7 @@ from etl_for_ecol_fusion_database_spark.catalog import (
     load_table,
     load_table_rebalanced,
 )
-from etl_for_ecol_fusion_database_spark.operators import graph, similarity
+from etl_for_ecol_fusion_database_spark.operators import graph
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -83,27 +80,6 @@ def test_rebalance_without_primary_key_raises(spark):
     round-robin repartition, whatever the file layout."""
     with pytest.raises(ValueError, match="no_pk_table"):
         load_table_rebalanced(spark, SF_SMOKE, "no_pk_table")
-
-
-def test_unknown_kernel_raises(spark):
-    docs = load_table(spark, SF_SMOKE, "embeddings")
-    with pytest.raises(ValueError, match="kernel"):
-        similarity.brute_force_topk(docs, kernel="arrows")
-    with pytest.raises(ValueError, match="kernel"):
-        similarity.quantized_topk(docs, kernel="arow")
-
-
-def test_arrow_kernels_empty_query_side(spark):
-    """No ids below n_queries: both kernels must return an empty relation
-    with the fold path's columns instead of crashing np.stack (ADVICE
-    r13).  n_queries=0 guarantees emptiness at any fixture."""
-    docs = load_table(spark, SF_SMOKE, "embeddings")
-    bf = similarity.brute_force_topk(docs, n_queries=0, kernel="arrow")
-    qt = similarity.quantized_topk(docs, n_queries=0, kernel="arrow")
-    assert bf.count() == 0
-    assert qt.count() == 0
-    assert set(bf.columns) == {"q_id", "cand_id", "cosine", "rank"}
-    assert set(qt.columns) == {"q_id", "cand_id", "q_cosine", "rank"}
 
 
 def test_connected_components_dedups_duplicate_nodes(spark):

@@ -829,25 +829,3 @@ def test_abandoned_views_complement_attribution(spark, sf_dir):
         .collect()
     }
     assert abandoned == all_views - attributed
-
-
-def test_cdc_arrow_kernel_bit_identical_to_fold(spark):
-    """cdc_chunk_rows(kernel='arrow') — the one-pass mapInPandas chunker —
-    must emit exactly the fold plan's rows (cut positions, chunk text,
-    hashes) across the parity traps: astral chars (code-point indexing),
-    empty/short/null docs (sentinel-only spans), and boundary-dense
-    repeated text."""
-    from etl_for_ecol_fusion_database_spark.operators import dedup
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog " * 30),
-        (2, ""),
-        (3, "short"),
-        (4, None),
-        (5, "ab\U00010348cdéf " * 50),
-        (6, "x" * 500),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    fold = sorted(map(tuple, dedup.cdc_chunk_rows(docs, kernel="fold").collect()))
-    arrow = sorted(map(tuple, dedup.cdc_chunk_rows(docs, kernel="arrow").collect()))
-    assert fold == arrow and len(fold) > 6
