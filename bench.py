@@ -22,12 +22,13 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "scripts"))
+import measure  # noqa: E402  (puts this checkout first on sys.path)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: registry queries timed by the harness (each run materialized via the
-#: mode in MATERIALIZE below)
+#: registry queries timed by the harness (each run materialized into the
+#: no-op sink, ``measure.materialize``)
 HEADLINE = [
     "flagship_valid_cohort",
     "fusion_etl_collisions",
@@ -208,32 +209,6 @@ PINNED_PANEL = [
     "x3_grouped_median",
 ]
 
-#: materialization used for every timed run.  "noop" (default, round 11+)
-#: writes to Spark's built-in no-op sink: every output column is fully
-#: computed and the plan cannot be pruned.  "count" (rounds 1-10) is kept
-#: for protocol-continuity comparisons, but UNDER-measures aggregate-shaped
-#: queries: Catalyst prunes aggregate-function evaluation under count()
-#: (q1_pricing_summary 0.36 s count vs 2.28 s noop at sf0.1; a bare 1-row
-#: aggregate prunes to a zero-column scan — docs/PROBE_PROFILE_SKETCH_r11
-#: .json).  The JSON line carries the mode so sheets are never compared
-#: across protocols.
-MATERIALIZE = os.environ.get("SPARK_GRAFT_MATERIALIZE", "noop").strip().lower()
-if MATERIALIZE not in ("noop", "count"):
-    # fail fast: a typo'd mode would silently run noop while the JSON line
-    # records the raw string — a sheet labeled with a mode never exercised
-    sys.exit(
-        f"SPARK_GRAFT_MATERIALIZE must be 'noop' or 'count', got "
-        f"{os.environ['SPARK_GRAFT_MATERIALIZE']!r}"
-    )
-
-
-def _materialize(df) -> None:
-    if MATERIALIZE == "count":
-        df.count()
-    else:
-        df.write.format("noop").mode("overwrite").save()
-
-
 #: timed runs per query; the reported figure is the MEDIAN.  Round-4/5
 #: single-shot timings produced ±0.5 s phantom swings in both directions
 #: from run-order noise alone; the median of 3 makes two consecutive bench
@@ -278,32 +253,6 @@ N_RUNS_HEAVY = 5
 HEAVY_WARMUP_RUNS = 4
 
 
-def _cpu_calibration() -> float:
-    """Single-thread CPU calibration: seconds for 1M chained sha256 digests.
-
-    Rounds run on different VMs/hosts; the r11 count-protocol panel
-    measured a uniform ~1.23x median slowdown vs r09 on UNTOUCHED
-    queries — hardware drift, not code.  A fixed pure-CPU workload
-    recorded with every sheet lets cross-round comparisons normalize
-    out the machine instead of mis-attributing it to the engine."""
-    import hashlib
-
-    x = b"calibration"
-    t0 = time.perf_counter()
-    for _ in range(1_000_000):
-        x = hashlib.sha256(x).digest()
-    return round(time.perf_counter() - t0, 3)
-
-
-def _gc_barrier(spark) -> None:
-    """Force a JVM collection outside the timing window (best-effort)."""
-    try:
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.2)
-    except Exception:
-        pass
-
-
 #: full per-query detail (timings at 3dp, shuffle bytes, errors) is written
 #: here — the stdout JSON line must stay under the driver's 2000-char tail
 #: capture (the r03 line was ~2.7k chars and lost its head), so it carries
@@ -311,146 +260,73 @@ def _gc_barrier(spark) -> None:
 DETAIL_FILE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_RESULTS.json")
 
 
-def _shuffle_totals(spark) -> tuple[int, int] | None:
-    """Cumulative (shuffle_read_bytes, shuffle_write_bytes) across all stages.
-
-    Uses the always-on AppStatusStore (the structure behind the Spark UI /
-    REST API) via py4j; per-query deltas of these totals give the shuffle
-    volume each benchmark query moved.  Returns None if the internal API
-    shape ever changes — shuffle metrics are best-effort evidence, never a
-    reason to lose the timings.
-    """
-    try:
-        sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        jvm = sc._jvm
-        darr = sc._gateway.new_array(jvm.double, 0)
-        stages = store.stageList(
-            jvm.java.util.ArrayList(), False, False, darr, jvm.java.util.ArrayList()
-        )
-        read = write = 0
-        it = stages.iterator()
-        while it.hasNext():
-            s = it.next()
-            read += s.shuffleReadBytes()
-            write += s.shuffleWriteBytes()
-        return read, write
-    except Exception:
-        return None
-
-
 def main() -> None:
     from etl_for_ecol_fusion_database_spark import registry
     from etl_for_ecol_fusion_database_spark.catalog import load_table
-    from etl_for_ecol_fusion_database_spark.session import get_spark
     from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
     # retain enough stage history that cumulative shuffle totals never shrink
     # mid-run (eviction would make per-query deltas negative)
-    spark = get_spark(
+    spark = measure.session(
         "bench",
         extra_conf={
             "spark.ui.retainedStages": "50000",
             "spark.ui.retainedJobs": "50000",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
 
     # machine-load telemetry (VERDICT r10 item #5): the driver sheet runs on
     # a possibly-contended machine while the committed idle panels do not,
     # and a +6% sheet vs -10% idle divergence cost the r10 verdict an hour
     # of disambiguation.  Recording the 1/5/15-min load averages before and
     # after the run makes every sheet carry its own contention evidence.
-    try:
-        load_pre = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        load_pre = None
-    cal_sec = _cpu_calibration()
+    load_pre = measure.host()["loadavg"]
+    cal_sec = measure.calibrate()
 
     timings: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     shuffle_bytes: dict[str, dict[str, int]] = {}
+    errors: dict[str, str] = {}
 
     # warm the JVM once (codegen, shuffle + window machinery) — not counted
-    from pyspark.sql.window import Window
-
     warm = load_table(spark, SF_DIR, "nation")
     warm.groupBy("n_regionkey").count().withColumn(
         "rn", F.row_number().over(Window.partitionBy("n_regionkey").orderBy("count"))
     ).count()
 
-    # per-query warmup at the smoke scale: compiles the query's generated
-    # code and plan shapes once, so the measured number is steady-state
-    # EXECUTION time — the quantity that scales with data volume — rather
-    # than first-run whole-stage-codegen compilation (a fixed few seconds
-    # that is pure noise against a 100 TB run).
-    warm_dir = "/root/testdata/sf0.001"
-    errors: dict[str, str] = {}
     for name in HEADLINE:
         fn = registry.QUERIES.get(name)
         if fn is None:
             continue
-        if os.path.isdir(warm_dir) and warm_dir != SF_DIR:
-            try:
-                _materialize(fn(spark, warm_dir))
-            except Exception:
-                pass
+        # the heavy heads additionally get uncounted warm-up runs AT THE
+        # MEASURED SF behind GC barriers: their r07 raw runs ([8.7, 8.4,
+        # 6.1, 6.2, 6.2] for x3_profile_sketch) show the first TWO
+        # full-scale runs ~40% hot even after the smoke-scale warm-up —
+        # tiered JIT on the Expand/percentile subtrees plus first-touch page
+        # cache at sf0.1, neither of which the smoke-scale pass reaches.
+        # Steady-state is the quantity that scales with data volume
+        # (VERDICT r07 item #5: raw-run spread <= 15% for every heavy head).
+        heavy = name in HEAVY_HEAD
         # one broken query must not void the whole bench (a round-2 bench
         # produced NO data because a single query raised): record the error,
         # keep timing the rest, surface everything in the JSON line.
-        # N_RUNS timed runs, median reported; shuffle deltas bracket the
-        # first run only (per-run shuffle volume is deterministic).
-        # the heavy heads additionally get uncounted warm-up runs AT THE
-        # MEASURED SF: their r07 raw runs ([8.7, 8.4, 6.1, 6.2, 6.2] for
-        # x3_profile_sketch) show the first TWO full-scale runs ~40% hot
-        # even after the sf0.001 warm-up and GC barrier — tiered JIT on the
-        # Expand/percentile subtrees plus first-touch page cache at sf0.1,
-        # neither of which the smoke-scale pass reaches.  Steady-state is
-        # the quantity that scales with data volume (VERDICT r07 item #5:
-        # raw-run spread <= 15% for every heavy head).
-        if name in HEAVY_HEAD:
-            for _ in range(HEAVY_WARMUP_RUNS):
-                try:
-                    _gc_barrier(spark)
-                    _materialize(fn(spark, SF_DIR))
-                except Exception:
-                    break
-        runs: list[float] = []
-        failed = False
-        before = _shuffle_totals(spark)
-        n_runs = N_RUNS_HEAVY if name in HEAVY_HEAD else N_RUNS
-        for i in range(n_runs):
-            if name in HEAVY_HEAD:
-                _gc_barrier(spark)
-            t0 = time.perf_counter()
-            try:
-                _materialize(fn(spark, SF_DIR))
-            except Exception as exc:  # noqa: BLE001 - report, don't die
-                errors[name] = f"{type(exc).__name__}: {exc}"[:300]
-                failed = True
-                break
-            runs.append(round(time.perf_counter() - t0, 3))
-            if i == 0:
-                after = _shuffle_totals(spark)
-                if before is not None and after is not None:
-                    shuffle_bytes[name] = {
-                        "read": max(0, after[0] - before[0]),
-                        "write": max(0, after[1] - before[1]),
-                    }
-        if failed:
-            # a later-run failure must not leave orphan shuffle data for a
-            # query that has no timings entry (consumers join the two maps)
-            shuffle_bytes.pop(name, None)
+        try:
+            runs, shuffle = measure.timed_runs(
+                spark, fn, SF_DIR, N_RUNS_HEAVY if heavy else N_RUNS,
+                warm_runs=HEAVY_WARMUP_RUNS if heavy else 0, gc=heavy,
+            )
+        except Exception as exc:  # noqa: BLE001 - report, don't die
+            errors[name] = f"{type(exc).__name__}: {exc}"[:300]
             continue
         all_runs[name] = runs
-        timings[name] = sorted(runs)[len(runs) // 2]
-        # ADVICE r12: under SPARK_GRAFT_BARRIER=persist each barriered
-        # query leaks one DISK_ONLY cached relation the query author can't
-        # release; drop them between queries so a long panel doesn't
-        # accumulate session-lifetime disk.  No-op in the default local
-        # mode (localCheckpoint blocks are not cache-manager entries).
-        if os.environ.get("SPARK_GRAFT_BARRIER", "").strip().lower() == "persist":
-            spark.catalog.clearCache()
+        timings[name] = measure.median(runs)
+        # per-run shuffle volume is deterministic: the first run's stands
+        if shuffle is not None:
+            shuffle_bytes[name] = shuffle
+        # ADVICE r12: persist-mode barriers leak one cached relation per
+        # barriered query; drop them between queries
+        measure.release_barriers(spark)
 
     # ingest-shaped copy (BASELINE.md): read the two biggest tables, apply the
     # fusion-style transform (lineage lit + derived cols), write parquet.
@@ -466,10 +342,7 @@ def main() -> None:
     timings["ingest_copy"] = ingest_sec
     shutil.rmtree(out_dir, ignore_errors=True)
 
-    try:
-        load_post = [round(x, 2) for x in os.getloadavg()]
-    except OSError:
-        load_post = None
+    load_post = measure.host()["loadavg"]
 
     total = round(sum(timings.values()), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
@@ -477,28 +350,11 @@ def main() -> None:
     rows_per_sec = round(n_rows / ingest_sec) if ingest_sec else None
 
     # provenance (VERDICT r11 item #5: every committed measurement artifact
-    # self-describes its source commit and tree state)
-    import subprocess
-
-    repo_dir = os.path.dirname(os.path.abspath(__file__))
-    try:
-        git_head = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd=repo_dir,
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-        # BENCH_RESULTS.json is this instrument's own output — a previous
-        # run's overwrite must not mark the next run's tree dirty.  The
-        # exclusion is a git pathspec (ADVICE r12), not string-slicing of
-        # porcelain lines: slicing misclassified rename entries
-        # ("R  old -> new") and quoted paths.
-        porcelain = subprocess.run(
-            ["git", "status", "--porcelain", "--", ".",
-             ":(exclude)BENCH_RESULTS.json"],
-            cwd=repo_dir, capture_output=True, text=True, timeout=10,
-        ).stdout
-        git_dirty = bool(porcelain.strip())
-    except Exception:
-        git_head, git_dirty = None, None
+    # self-describes its source commit, tree state and active knobs);
+    # BENCH_RESULTS.json is this instrument's own output, so a previous
+    # run's overwrite must not mark the next run's tree dirty
+    prov = measure.provenance(exclude=("BENCH_RESULTS.json",))
+    git_head, git_dirty = prov["git_head"], prov["git_dirty"]
 
     # full-precision detail (incl. per-query shuffle bytes) → side file; the
     # driver's tail capture only keeps the last 2000 chars of stdout
@@ -520,13 +376,12 @@ def main() -> None:
         "sf": sf_val,
         "ingest_rows": n_rows,
         "ingest_rows_per_sec": rows_per_sec,
-        "materialize": MATERIALIZE,
+        "materialize": "noop",
         "cal_sha256_1m_sec": cal_sec,
         "loadavg_pre": load_pre,
         "loadavg_post": load_post,
-        "cpu_count": os.cpu_count(),
-        "git_head": git_head,
-        "git_dirty": git_dirty,
+        "cpu_count": measure.host()["cpu_count"],
+        **prov,
         "errors": errors,
     }
     try:
@@ -547,7 +402,7 @@ def main() -> None:
         "queries": {k: round(v, 2) for k, v in timings.items()},
         "sf": sf_val,
         "ingest_rps": rows_per_sec,
-        "mat": MATERIALIZE,
+        "mat": "noop",
         "cal": cal_sec,
         # 1-min load average at start/end: a pre-load near cpu_count means
         # the sheet ran contended and its timings are not comparable to the

@@ -180,12 +180,6 @@ def load_table_rebalanced(
             "catalog.PRIMARY_KEYS to hash-partition on"
         )
     df = load_table(spark, sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_REBALANCE", "").strip().lower() == "off":
-        # measurement kill-switch (scripts/ab_probe.py) and the documented
-        # scale knob: on a cluster whose inputs already carry enough row
-        # groups the branch below is a no-op anyway, but `off` lets an
-        # operator force the raw scan layout end to end
-        return df
     target = spark.sparkContext.defaultParallelism
     if target <= 1 or effective_scan_parallelism(sf_dir, name, cap=target) >= target:
         return df

@@ -35,9 +35,10 @@ into the fault-tolerant barrier.
    harness), each query leaks one DISK_ONLY cached relation for the
    session's lifetime.  Harnesses that set ``SPARK_GRAFT_BARRIER=persist``
    must call ``spark.catalog.clearCache()`` between queries (bench.py and
-   scripts/verify_local.py do; the persist-mode plan test does too).  The
-   cached relations are bounded (docs x n_buckets / vocabulary size), so
-   the leak is slow — but it is unbounded over session lifetime.
+   the probe scripts do, via ``scripts/measure.py``'s ``release_barriers``;
+   the persist-mode plan test does too).  The cached relations are bounded
+   (docs x n_buckets / vocabulary size), so the leak is slow — but it is
+   unbounded over session lifetime.
 """
 
 from __future__ import annotations
@@ -49,16 +50,20 @@ from pyspark.sql import DataFrame
 _MODES = ("local", "persist")
 
 
+def barrier_mode() -> str:
+    """The deployment's default mode: ``$SPARK_GRAFT_BARRIER``, else ``"local"``."""
+    return os.environ.get("SPARK_GRAFT_BARRIER", "local").strip().lower()
+
+
 def extraction_barrier(df: DataFrame, mode: str | None = None) -> DataFrame:
     """Barrier a bounded extraction relation so each downstream consumer
     reads the materialized result instead of re-running the extraction.
 
-    ``mode``: ``"local"`` | ``"persist"`` | None (None reads
-    ``$SPARK_GRAFT_BARRIER``, default ``"local"``).  See module docstring
-    for the executor-loss trade-off.
+    ``mode``: ``"local"`` | ``"persist"`` | None (``barrier_mode()``).  See
+    module docstring for the executor-loss trade-off.
     """
     if mode is None:
-        mode = os.environ.get("SPARK_GRAFT_BARRIER", "local").strip().lower()
+        mode = barrier_mode()
     if mode not in _MODES:
         raise ValueError(f"barrier mode must be one of {_MODES}, got {mode!r}")
     if mode == "persist":

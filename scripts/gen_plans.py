@@ -6,11 +6,10 @@ shuffle behavior (the properties tests/test_plan_quality.py pins)."""
 from __future__ import annotations
 
 import os
-import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", f"{measure.FIXTURES}/sf0.01")
 
 SHOWCASE = [
     "flagship_valid_cohort",
@@ -121,10 +120,8 @@ SHOWCASE = [
 
 def main() -> None:
     from etl_for_ecol_fusion_database_spark import registry
-    from etl_for_ecol_fusion_database_spark.session import get_spark
 
-    spark = get_spark("gen-plans", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("gen-plans", shuffle_partitions=8)
     out = [
         "# Physical plans (generated by scripts/gen_plans.py — do not edit)",
         "",
@@ -137,10 +134,9 @@ def main() -> None:
     for name in SHOWCASE:
         df = registry.QUERIES[name](spark, SF_DIR)
         df.count()  # drive AQE to a final plan
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = measure.plan_text(df, "executed")
         out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    dest = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "docs", "PLANS.md")
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    dest = os.path.join(measure.REPO, "docs", "PLANS.md")
     with open(dest, "w") as f:
         f.write("\n".join(out))
     print(f"wrote {dest} ({len(SHOWCASE)} plans)")

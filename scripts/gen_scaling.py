@@ -13,7 +13,8 @@ highest-ratio queries get one more 10x step, measured on the derived
 offsets + per-replica letter rotation + hash-regenerated embeddings, so
 dedup/ANN pair spaces scale like real data instead of degenerating).
 sf0.1 and sf1 cells for those queries are median-of-3 (the ratio is the
-evidence; single runs carry ±0.5 s noise on the embedding-heavy heads).
+evidence; single runs carry ±0.5 s noise on the embedding-heavy heads);
+every cell follows ``measure.timed_runs``'s smoke-scale warm-up.
 
 Usage: python scripts/gen_scaling.py   (writes docs/SCALING.md)
 """
@@ -22,15 +23,11 @@ from __future__ import annotations
 
 import datetime
 import os
-import statistics
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SFS = ["0.001", "0.01", "0.1"]
-SF1_DIR = os.path.join(REPO, ".scaling", "sf1")
+SF1_DIR = os.path.join(measure.REPO, ".scaling", "sf1")
 
 #: the sf1 decade panel — the queries whose 0.01->0.1 ratios looked
 #: super-linear (fixed overhead no longer explains them) plus the most
@@ -76,31 +73,14 @@ SF1_QUERIES = [
 
 
 def _timed(fn, spark, sf_dir: str, runs: int = 1) -> float:
-    vals = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        _materialize(fn(spark, sf_dir))
-        vals.append(time.perf_counter() - t0)
-    return round(statistics.median(vals), 3)
-
-
-def _materialize(df):
-    """Noop-sink materialization (round 11): count() lets Catalyst prune
-    aggregate-function evaluation, which can make a scaling RATIO vacuous
-    (x3_dsir_logweights measured 0.96x/decade under count() because the
-    pruned plan did no per-doc work at either SF).  Future regenerations
-    of the committed artifacts use this; compare against same-protocol
-    runs only."""
-    df.write.format("noop").mode("overwrite").save()
+    return measure.median(measure.timed_runs(spark, fn, sf_dir, runs)[0])
 
 
 def main() -> None:
     from bench import HEADLINE
     from etl_for_ecol_fusion_database_spark import registry
-    from etl_for_ecol_fusion_database_spark.session import get_spark
 
-    spark = get_spark("scaling")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("scaling")
 
     have_sf1 = os.path.isdir(SF1_DIR)
     sf1_panel = [n for n in SF1_QUERIES if n in registry.QUERIES]
@@ -137,7 +117,7 @@ def main() -> None:
         "dedup/ANN workloads don't degenerate) covers the panel of the most",
         "expensive / highest-ratio queries; those cells and their sf0.1",
         "cells are median-of-3, everything else is a single timed run in",
-        "one warm session.",
+        "one warm session (each cell after a smoke-scale warm-up run).",
         "",
         "| query | sf0.001 s | sf0.01 s | sf0.1 s | 0.01->0.1 | sf1 s | 0.1->1 |",
         "|---|---|---|---|---|---|---|",
@@ -176,7 +156,7 @@ def main() -> None:
             " overhead-dominated (1.2x step ratio)."
         )
         out.append("")
-    with open(os.path.join(REPO, "docs", "SCALING.md"), "w") as f:
+    with open(os.path.join(measure.REPO, "docs", "SCALING.md"), "w") as f:
         f.write("\n".join(out))
     print("\n".join(out[-6:]))
     spark.stop()

@@ -22,17 +22,13 @@ from __future__ import annotations
 
 import datetime
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF01_DIR = "/root/testdata/sf0.1"
-SF1_DIR = os.path.join(REPO, ".scaling", "sf1")
-SF10_DIR = os.path.join(REPO, ".scaling", "sf10")
-WARM_DIR = "/root/testdata/sf0.001"
-OUT = os.path.join(REPO, "docs", "SCALING_SF10.md")
+SF01_DIR = f"{measure.FIXTURES}/sf0.1"
+SF1_DIR = os.path.join(measure.REPO, ".scaling", "sf1")
+SF10_DIR = os.path.join(measure.REPO, ".scaling", "sf10")
+OUT = os.path.join(measure.REPO, "docs", "SCALING_SF10.md")
 
 #: the two-decade panel: every scaling-study head that is heavy or
 #: structurally interesting at sf1 (dedup/ANN/text/curation shapes whose
@@ -78,42 +74,23 @@ MEDIAN_OF_3 = {
 
 
 def _timed(fn, spark, sf_dir: str, runs: int = 1) -> float:
-    samples = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        _materialize(fn(spark, sf_dir))
-        samples.append(time.perf_counter() - t0)
-    samples.sort()
-    return round(samples[len(samples) // 2], 3)
-
-
-def _materialize(df):
-    """Noop-sink materialization (round 11): count() lets Catalyst prune
-    aggregate-function evaluation, which can make a scaling RATIO vacuous
-    (x3_dsir_logweights measured 0.96x/decade under count() because the
-    pruned plan did no per-doc work at either SF).  Future regenerations
-    of the committed artifacts use this; compare against same-protocol
-    runs only."""
-    df.write.format("noop").mode("overwrite").save()
+    return measure.median(measure.timed_runs(spark, fn, sf_dir, runs)[0])
 
 
 def main() -> None:
     from etl_for_ecol_fusion_database_spark import registry
-    from etl_for_ecol_fusion_database_spark.session import get_spark
 
     for d in (SF1_DIR, SF10_DIR):
         if not os.path.isdir(d):
             print(f"missing fixture {d}; run scripts/gen_sf1.py / gen_sf10.py")
             return
 
-    spark = get_spark("scaling-sf10")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("scaling-sf10")
 
     rows: list[tuple[str, float, float, float]] = []
     for name in PANEL:
         fn = registry.QUERIES[name]
         runs = 3 if name in MEDIAN_OF_3 else 1
-        _materialize(fn(spark, WARM_DIR))  # codegen/JIT warm-up, uncounted
         t01 = _timed(fn, spark, SF01_DIR, runs)
         t1 = _timed(fn, spark, SF1_DIR, runs)
         t10 = _timed(fn, spark, SF10_DIR, runs)

@@ -33,17 +33,13 @@ from __future__ import annotations
 
 import datetime
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF1_DIR = os.path.join(REPO, ".scaling", "sf1")
-SF10_DIR = os.path.join(REPO, ".scaling", "sf10")
-SF100_DIR = os.path.join(REPO, ".scaling", "sf100")
-WARM_DIR = "/root/testdata/sf0.001"
-OUT = os.path.join(REPO, "docs", "SCALING_SF100.md")
+SF1_DIR = os.path.join(measure.REPO, ".scaling", "sf1")
+SF10_DIR = os.path.join(measure.REPO, ".scaling", "sf10")
+SF100_DIR = os.path.join(measure.REPO, ".scaling", "sf100")
+OUT = os.path.join(measure.REPO, "docs", "SCALING_SF100.md")
 
 PANEL = [
     "x1_semdedup",
@@ -55,38 +51,21 @@ PANEL = [
 ]
 
 
-def _materialize(df):
-    """Noop-sink materialization (round 11): count() lets Catalyst prune
-    aggregate-function evaluation, which can make a scaling RATIO vacuous
-    (x3_dsir_logweights measured 0.96x/decade under count() because the
-    pruned plan did no per-doc work at either SF).  Future regenerations
-    of the committed artifacts use this; compare against same-protocol
-    runs only."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
     from etl_for_ecol_fusion_database_spark import registry
-    from etl_for_ecol_fusion_database_spark.session import get_spark
 
     for d in (SF1_DIR, SF10_DIR, SF100_DIR):
         if not os.path.isdir(d):
             print(f"missing fixture {d}; run the gen_sf* scripts")
             return
 
-    spark = get_spark("scaling-sf100")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("scaling-sf100")
 
     rows: list[tuple[str, float, float, float]] = []
     for name in PANEL:
         fn = registry.QUERIES[name]
-        _materialize(fn(spark, WARM_DIR))  # codegen/JIT warm-up, uncounted
-        cells = []
-        for d in (SF1_DIR, SF10_DIR, SF100_DIR):
-            t0 = time.perf_counter()
-            _materialize(fn(spark, d))
-            cells.append(round(time.perf_counter() - t0, 3))
-        t1, t10, t100 = cells
+        t1, t10, t100 = (measure.timed_runs(spark, fn, d, 1)[0][0]
+                         for d in (SF1_DIR, SF10_DIR, SF100_DIR))
         rows.append((name, t1, t10, t100))
         print(f"{name:32s} sf1={t1:8.2f} sf10={t10:8.2f} sf100={t100:8.2f} "
               f"ratios {t10 / t1:.1f}x {t100 / t10:.1f}x", flush=True)

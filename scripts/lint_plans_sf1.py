@@ -37,12 +37,11 @@ import re
 import sys
 import traceback
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SF1_DIR = os.path.join(REPO, ".scaling", "sf1")
-SF001_DIR = "/root/testdata/sf0.01"
-OUT = os.path.join(REPO, "docs", "PLANLINT_SF1.md")
+SF1_DIR = os.path.join(measure.REPO, ".scaling", "sf1")
+SF001_DIR = f"{measure.FIXTURES}/sf0.01"
+OUT = os.path.join(measure.REPO, "docs", "PLANLINT_SF1.md")
 
 _JOIN_OPS = (
     "BroadcastHashJoin",
@@ -53,7 +52,7 @@ _JOIN_OPS = (
 
 
 def _plan(fn, spark, sf_dir: str) -> str:
-    return fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    return measure.plan_text(fn(spark, sf_dir), "executed")
 
 
 def _join_mix(plan: str) -> dict[str, int]:
@@ -78,14 +77,12 @@ def main() -> int:
         return 1
 
     # the allowlists are the single source of truth in the test module
-    sys.path.insert(0, os.path.join(REPO, "tests"))
+    sys.path.insert(0, os.path.join(measure.REPO, "tests"))
     from test_plan_lint import BNLJ_OK, GLOBAL_WINDOW_OK
 
     from etl_for_ecol_fusion_database_spark import registry
-    from etl_for_ecol_fusion_database_spark.session import get_spark
 
-    spark = get_spark("plan-lint-sf1")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("plan-lint-sf1")
 
     rows: list[tuple[str, str, str, str]] = []
     violations: list[str] = []

@@ -6,75 +6,44 @@ done-bar on the r09 bench (x2_knn_join 32%, x2_index_persist 22%,
 x2_pq_adc_topk 18%, x2_random_projection 17%) and the absolute deltas
 are 0.2-0.6 s on 1-3 s queries — plausibly the measurement noise floor
 at this scale, but that claim needs run data.  This probe runs each
-query MANY times (default 12) on an idle machine after the same
-warm-up discipline bench.py uses, prints per-query stats, and writes
-JSON for the BASELINE.md noise-floor paragraph (or, if the spread
-settles with more warm-ups, the evidence for raising them).
+query MANY times on an idle machine after bench.py's heavy-head warm-up
+discipline (``measure.timed_runs`` with GC barriers), prints per-query
+stats, and writes JSON for the BASELINE.md noise-floor paragraph (or, if
+the spread settles with more warm-ups, the evidence for raising them).
 
-Usage: python scripts/probe_spread.py [out.json]   (run ALONE — any
-concurrent Spark job inflates timings 10-30%)
-
-Round 12: the query list and run count are env-overridable so every
-targeted idle probe runs through this committed script (clean-tree
-provenance — VERDICT r11 item #5):
-  SPARK_GRAFT_PROBE_QUERIES=flagship_valid_cohort,x12_data_quality
-  SPARK_GRAFT_PROBE_RUNS=5
+Usage: python scripts/probe_spread.py [--queries a,b] [--runs 12]
+                                      [--warm 4] [out.json]
+(run ALONE — any concurrent Spark job inflates timings 10-30%)
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import measure
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-WARM_DIR = "/root/testdata/sf0.001"
-QUERIES = os.environ.get(
-    "SPARK_GRAFT_PROBE_QUERIES",
-    "x2_knn_join,x2_index_persist,x2_pq_adc_topk,x2_random_projection",
-).split(",")
-N_WARM = int(os.environ.get("SPARK_GRAFT_PROBE_WARM", "4"))
-N_RUNS = int(os.environ.get("SPARK_GRAFT_PROBE_RUNS", "12"))
-
-
-def _materialize(df):
-    """Noop-sink materialization (round 11): count() lets Catalyst prune
-    aggregate-function evaluation, which can make a scaling RATIO vacuous
-    (x3_dsir_logweights measured 0.96x/decade under count() because the
-    pruned plan did no per-doc work at either SF).  Future regenerations
-    of the committed artifacts use this; compare against same-protocol
-    runs only."""
-    df.write.format("noop").mode("overwrite").save()
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", f"{measure.FIXTURES}/sf0.1")
 
 
 def main() -> None:
-    from etl_for_ecol_fusion_database_spark import registry
-    from etl_for_ecol_fusion_database_spark.session import get_spark
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--queries", default="x2_knn_join,x2_index_persist,"
+                    "x2_pq_adc_topk,x2_random_projection")
+    ap.add_argument("--runs", type=int, default=12)
+    ap.add_argument("--warm", type=int, default=4)
+    ap.add_argument("out", nargs="?", default="/tmp/probe_spread.json")
+    args = ap.parse_args()
 
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/probe_spread.json"
-    spark = get_spark("probe-spread")
-    spark.sparkContext.setLogLevel("ERROR")
+    from etl_for_ecol_fusion_database_spark import registry
+
+    spark = measure.session("probe-spread")
     results: dict[str, dict] = {}
-    for name in QUERIES:
-        fn = registry.QUERIES[name]
-        _materialize(fn(spark, WARM_DIR))  # smoke-scale compile
-        for _ in range(N_WARM):  # full-SF JIT warm-up, uncounted
-            _materialize(fn(spark, SF_DIR))
-        try:
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(0.2)
-        except Exception:
-            pass
-        runs = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            _materialize(fn(spark, SF_DIR))
-            runs.append(round(time.perf_counter() - t0, 3))
-        runs_sorted = sorted(runs)
-        med = runs_sorted[len(runs) // 2]
+    for name in args.queries.split(","):
+        runs, _ = measure.timed_runs(spark, registry.QUERIES[name], SF_DIR,
+                                     args.runs, warm_runs=args.warm, gc=True)
+        med = measure.median(runs)
         spread = (max(runs) - min(runs)) / min(runs)
         results[name] = {
             "runs": runs,
@@ -84,36 +53,16 @@ def main() -> None:
             "spread_pct": round(spread * 100, 1),
             "abs_delta_s": round(max(runs) - min(runs), 3),
         }
-        print(
-            f"{name:24s} med={med:6.3f} spread={spread * 100:5.1f}% "
-            f"runs={runs}",
-            flush=True,
-        )
-    # provenance (VERDICT r11 item #5: every committed artifact, probes
-    # included, from a clean tree with its commit recorded)
-    import subprocess
-
-    try:
-        head = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd=os.path.dirname(
-                os.path.dirname(os.path.abspath(__file__))),
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-        dirty = bool(subprocess.run(
-            ["git", "status", "--porcelain"], cwd=os.path.dirname(
-                os.path.dirname(os.path.abspath(__file__))),
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip())
-    except Exception:
-        head, dirty = None, None
+        print(f"{name:24s} med={med:6.3f} spread={spread * 100:5.1f}% "
+              f"runs={runs}", flush=True)
+        measure.release_barriers(spark)
     results["__meta__"] = {
-        "sf_dir": SF_DIR, "n_warm": N_WARM, "n_runs": N_RUNS,
-        "git_head": head, "git_dirty": dirty,
-        "loadavg": [round(x, 2) for x in os.getloadavg()],
+        "sf_dir": SF_DIR, "n_warm": args.warm, "n_runs": args.runs,
+        "cal": measure.calibrate(), **measure.host(), **measure.provenance(),
     }
-    with open(out_path, "w") as fh:
+    with open(args.out, "w") as fh:
         json.dump(results, fh, indent=1)
-    print(f"wrote {out_path}")
+    print(f"wrote {args.out}")
 
 
 if __name__ == "__main__":

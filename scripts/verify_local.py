@@ -8,8 +8,10 @@ array-typed columns fail here exactly as they fail on the driver's sheet).
 
 The results JSON carries provenance so downstream consumers can trust it
 (ADVICE r08 / VERDICT r08 item #3): a ``__meta__`` record with the git
-HEAD and tree-dirty flag, and a per-query ``fp`` — the accessed-symbol
-witness fingerprint of the code that actually ran.
+HEAD, dirty flag and dirty paths of the checkout this script lives in
+(the one it imports and verifies) and the active ``SPARK_GRAFT_*`` knobs,
+and a per-query ``fp`` — the accessed-symbol witness fingerprint of the
+code that actually ran.
 ``update_witness_fp.py --accept-verified`` refuses any entry whose
 recorded ``fp`` no longer matches the current tree, so a results file
 produced against an older tree can never re-anchor an edited query.
@@ -24,16 +26,15 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import subprocess
 import sys
 import time
 import traceback
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+import measure  # puts this checkout first on sys.path
 
-SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", "/root/testdata/sf0.01")
+SF_DIR = os.environ.get("SPARK_GRAFT_VERIFY_SF_DIR", f"{measure.FIXTURES}/sf0.01")
 OUT_PATH = os.environ.get("SPARK_GRAFT_VERIFY_OUT", "/tmp/verify_local.json")
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -74,47 +75,12 @@ def canon_hash(df_pandas):
     return h.hexdigest()
 
 
-def _git_provenance() -> dict:
-    """HEAD commit + dirty flag, best-effort (evidence must still be
-    produced in a non-git checkout, just without the anchor)."""
-    out = {}
-    try:
-        out["git_head"] = subprocess.run(
-            ["git", "rev-parse", "HEAD"], cwd="/root/repo",
-            capture_output=True, text=True, timeout=10,
-        ).stdout.strip() or None
-        porcelain = subprocess.run(
-            ["git", "status", "--porcelain"], cwd="/root/repo",
-            capture_output=True, text=True, timeout=10,
-        ).stdout
-        out["git_dirty"] = bool(porcelain.strip())
-        if porcelain.strip():
-            # VERDICT r09 item #5: a dirty-tree artifact must say WHICH
-            # paths were in flight so the audit chain can judge whether
-            # they could have touched the measured code.  Porcelain lines
-            # are "XY path" (2-char status, space, path) — do NOT strip
-            # the full output first, the leading status char of the first
-            # line is significant.
-            out["git_dirty_paths"] = sorted(
-                line[3:] for line in porcelain.splitlines() if line.strip()
-            )
-            print(
-                "WARNING: dirty tree — results carry git_dirty_paths: "
-                + ", ".join(out["git_dirty_paths"]),
-                flush=True,
-            )
-    except Exception:
-        pass
-    return out
-
-
 def main(only=None):
     import __spark_entry__ as entry
     from etl_for_ecol_fusion_database_spark import witness
-    from etl_for_ecol_fusion_database_spark.session import get_spark
 
     fps = witness.current_fingerprints()
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = measure.session("verify-local", master="local[8]", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -163,20 +129,22 @@ def main(only=None):
         if status == "FAIL":
             print(json.dumps({k: v for k, v in rec.items() if k != "trace"},
                              default=str), flush=True)
-        # ADVICE r12: persist-mode barriers leak one cached relation per
-        # barriered query for the session lifetime; release between queries
-        # (no-op under the default local mode)
-        if os.environ.get("SPARK_GRAFT_BARRIER", "").strip().lower() == "persist":
-            spark.catalog.clearCache()
+        measure.release_barriers(spark)
 
     fails = {k: v for k, v in results.items()
              if not v.get("hash_match") and v.get("err") != "no_oracle"}
     print(f"\n{len(results)} run, {len(fails)} FAIL, "
           f"{sum(1 for v in results.values() if v.get('err') == 'no_oracle')} rows-only")
+    prov = measure.provenance()
+    if prov["git_dirty"]:
+        # VERDICT r09 item #5: a dirty-tree artifact says WHICH paths were
+        # in flight, so an audit can judge whether they touched the code
+        print("WARNING: dirty tree — results carry git_dirty_paths: "
+              + ", ".join(prov["git_dirty_paths"]), flush=True)
     results["__meta__"] = {
         "sf_dir": SF_DIR,
         "generated_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        **_git_provenance(),
+        **prov,
     }
     with open(OUT_PATH, "w") as f:
         json.dump(results, f, indent=1, default=str)

@@ -7,9 +7,8 @@ tests/test_kernel_parity.py).  Pins:
 
 - ``load_table_rebalanced`` must be value-identical to ``load_table``
   (it only moves rows between partitions), must be a NO-OP when the file
-  layout already feeds ``defaultParallelism`` scan tasks, and must honor
-  the ``SPARK_GRAFT_REBALANCE=off`` kill-switch, and must refuse a table
-  without a registered primary key;
+  layout already feeds ``defaultParallelism`` scan tasks, and must refuse
+  a table without a registered primary key;
 - ``effective_scan_parallelism`` reads row groups from footers (the
   quantity that bounds emitting scan tasks), with the early-exit cap;
 - ``connected_components`` collapses duplicate ``nodes`` rows (the r13
@@ -17,8 +16,6 @@ tests/test_kernel_parity.py).  Pins:
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,16 +59,6 @@ def test_rebalanced_load_widens_to_default_parallelism(spark):
         "p", F.spark_partition_id()
     )
     assert a.exceptAll(b).count() == 0
-
-
-def test_rebalance_kill_switch(spark):
-    os.environ["SPARK_GRAFT_REBALANCE"] = "off"
-    try:
-        reb = load_table_rebalanced(spark, SF_SMOKE, "documents")
-        plain = load_table(spark, SF_SMOKE, "documents")
-        assert reb.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
-    finally:
-        del os.environ["SPARK_GRAFT_REBALANCE"]
 
 
 def test_rebalance_without_primary_key_raises(spark):
