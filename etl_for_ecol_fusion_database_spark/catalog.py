@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .kernels import use_arrow
 
 #: fixture tables generated by the driver (TESTDATA.md)
 FIXTURE_TABLES = (
@@ -226,14 +225,7 @@ def local_relation(
     ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
     ``LocalTableScan`` instead: no Python worker, values binary-exact,
     schema and nullability as given.  A NULL in a non-nullable field
-    raises, as ``createDataFrame``'s schema verification does.
-
-    Without the Arrow dependencies (``kernels.use_arrow("auto")`` false —
-    where the operators' pure-JVM fallbacks run, e.g.
-    ``clustering.assign_clusters_join``) the Python-RDD path is the only
-    one left, so the table is built that way."""
-    if not use_arrow("auto"):
-        return spark.createDataFrame(rows, schema)
+    raises, as ``createDataFrame``'s schema verification does."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

@@ -14,10 +14,10 @@ SemDeDup) and resolves it through :func:`use_arrow`:
 - ``"arrow"`` runs the numpy kernel.  It folds floats in the fold's order
   (scalar-sequential across the dim index) or uses integer arithmetic, so
   its values are bit-identical; rounding and decisions stay Spark-side;
-- ``"auto"`` (every twin's default) is ``"arrow"`` when numpy, pandas and
-  pyarrow import and the id column, if the twin carries one, is
-  integral — the kernels round-trip ids through numpy, which is lossless
-  and order-preserving only for integers.  Anything else raises.
+- ``"auto"`` (every twin's default) is ``"arrow"`` when the id column, if
+  the twin carries one, is integral — the kernels round-trip ids through
+  numpy, which is lossless and order-preserving only for integers.
+  Anything else raises.
 
 Kernel-side rules the parity tests pin: an Arrow plan declares the id
 column's own type, so ``"auto"`` never changes an output schema; a NULL
@@ -25,8 +25,9 @@ id is treated as the fold treats it (each twin says how), and id columns
 are cast through :func:`checked_id_series`; an empty query side or an
 empty batch yields an empty relation, never a numpy error.
 
-This module imports neither numpy nor pandas, so it loads where the
-kernels' dependencies are absent.
+numpy, pandas and pyarrow are required dependencies, so neither branch is
+a fallback for their absence: the fold stays because it is the parity
+reference and the route for non-integral ids.
 """
 
 from __future__ import annotations
@@ -50,18 +51,12 @@ def use_arrow(kernel: str, id_type: T.DataType | None = None) -> bool:
     """Resolve a twin's ``kernel`` argument: True runs the Arrow kernel.
 
     Raises on any name outside :data:`KERNELS` (a typo must not silently
-    take the slow fold path).  ``"auto"`` probes the dependencies at call
-    time and, when ``id_type`` is given, requires it to be integral."""
+    take the slow fold path).  ``"auto"`` requires ``id_type``, when
+    given, to be integral."""
     if kernel not in KERNELS:
         raise ValueError(f"kernel must be one of {KERNELS}, got {kernel!r}")
     if kernel != "auto":
         return kernel == "arrow"
-    try:
-        import numpy  # noqa: F401
-        import pandas  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError:
-        return False
     return id_type is None or type(id_type) in _NULLABLE_INT_DTYPE
 
 

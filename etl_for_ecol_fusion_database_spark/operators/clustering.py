@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..catalog import local_relation
 from ..kernels import checked_id_series, nullable_int_dtype, use_arrow
 
 
@@ -67,72 +66,13 @@ def assign_clusters(df: DataFrame, vec_col: str, centroids: list[list[float]]) -
     return with_d.select(*df.columns, best.cast("int").alias("cluster"))
 
 
-def assign_clusters_join(
-    df: DataFrame,
-    vec_col: str,
-    centroids: list[list[float]],
-    id_col: str,
-) -> DataFrame:
-    """``assign_clusters`` semantics for LARGE ``k`` — identical output
-    (``df.columns`` + ``cluster`` = argmin squared-distance, ties to the
-    lowest index) via a broadcast join instead of inlined literal folds.
-
-    The literal-expression path above inlines one ``aggregate`` fold per
-    centroid into a single projection: perfect to k~32, codegen-hostile
-    beyond (the generated method outgrows JIT limits and Catalyst falls
-    back to interpreted evaluation).  Here the k×dim centroid table is a
-    broadcast DataFrame; each row meets each centroid once (N×k rows via
-    BroadcastNestedLoopJoin — bounded, k rows broadcast), the squared
-    distance is ONE fold over a joined array column, and the argmin is a
-    ``min_by`` aggregation keyed on the id.  With an array column in the
-    value struct Spark plans it as a SortAggregate (no mutable hash
-    buffer for non-primitive types), but PARTIAL aggregation still
-    applies: the sort is per-partition and the shuffle carries exactly
-    one row per input id, never the N×k joined rows.  Exact-double
-    compare + struct ordering on (dist, cidx) reproduces the literal
-    path's lowest-index tie rule bit for bit.
-
-    This is the pure-JVM fallback; ``assign_clusters_batched`` (Arrow +
-    numpy, bit-identical) is the fast path ``semantic_dedup`` uses for
-    large k — the interpreted per-(row, centroid) fold here costs ~50x
-    the vectorized kernel."""
-    spark = df.sparkSession
-    cent = local_relation(
-        spark,
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        schema="_cidx int, _cv array<double>",
-    )
-    dist = F.aggregate(
-        F.zip_with(F.col(vec_col), F.col("_cv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    carry = [c for c in df.columns if c != id_col]
-    # min_by with a SCALAR-ONLY ordering struct keeps the reduction an
-    # ObjectHashAggregate with map-side partial combine; folding the
-    # carried array columns into a min(struct(...)) instead would force a
-    # SortAggregate — a full sort of the N*k joined rows
-    value = F.struct(F.col("_cidx"), *[F.col(c).alias(c) for c in carry])
-    order = F.struct(dist.alias("_d"), F.col("_cidx"))
-    best = (
-        df.crossJoin(F.broadcast(cent))
-        .groupBy(id_col)
-        .agg(F.min_by(value, order).alias("_m"))
-    )
-    return best.select(
-        id_col,
-        *[F.col(f"_m.{c}").alias(c) for c in carry],
-        F.col("_m._cidx").cast("int").alias("cluster"),
-    )
-
-
 def assign_clusters_batched(
     df: DataFrame,
     vec_col: str,
     centroids: list[list[float]],
 ) -> DataFrame:
     """``assign_clusters`` semantics at large ``k`` via Arrow-batched
-    numpy (``mapInPandas``) — BIT-IDENTICAL to the JVM fold paths, ~50x
+    numpy (``mapInPandas``) — BIT-IDENTICAL to the JVM fold, ~50x
     faster per row than interpreted higher-order-function evaluation.
 
     Why Python here when the rule is "UDFs are the slow path": the
@@ -144,14 +84,14 @@ def assign_clusters_batched(
     a second.  No semantics move into Python that the fold didn't have.
 
     Bit-exactness contract (what makes this substitutable for
-    ``assign_clusters``/``assign_clusters_join`` under the DuckDB-oracle
-    hash gate): the WINNING cluster id per row is exactly the one the
-    fold paths pick — the fold's scalar-sequential float64 accumulation
-    (``acc += (v_i - c_i)^2`` across the dim index in order) decides
-    every comparison the outcome could hinge on, with first-minimum
-    (lowest-index) ties.  Verified equal to both JVM paths in
-    tests/test_curation_ops.py; adversarial duplicate-centroid /
-    near-tie cases pinned in tests/test_round10_kernels.py.
+    ``assign_clusters`` under the DuckDB-oracle hash gate): the WINNING
+    cluster id per row is exactly the one the fold picks — the fold's
+    scalar-sequential float64 accumulation (``acc += (v_i - c_i)^2``
+    across the dim index in order) decides every comparison the outcome
+    could hinge on, with first-minimum (lowest-index) ties.  Verified
+    equal to the JVM fold in tests/test_curation_ops.py; adversarial
+    duplicate-centroid / near-tie cases pinned in
+    tests/test_round10_kernels.py.
 
     HOW (round 10 — the dim-sequential full (n x k) loop was 160 s at
     sf10's N=200k/k=1600, memory-bound on 3 temps of n x k doubles per
@@ -260,9 +200,9 @@ def assign_clusters_auto(
     row_count_hint: int | None = None,
 ) -> DataFrame:
     """Dispatch between the bit-identical assignment engines: the
-    matmul-pruned Arrow kernel (:func:`assign_clusters_batched`) when its
-    deps import and the work justifies an Arrow pass, else the
-    inlined-fold JVM path (:func:`assign_clusters`).
+    matmul-pruned Arrow kernel (:func:`assign_clusters_batched`) when the
+    work justifies an Arrow pass, else the inlined-fold JVM path
+    (:func:`assign_clusters`).
 
     Why not always Arrow (round-10 bench data): Catalyst never codegens
     higher-order functions, so a k=8 inline assignment pays 2 interpreted
@@ -289,7 +229,7 @@ def assign_clusters_auto(
         big = k > 32 or (
             row_count_hint is not None and row_count_hint * k * dim > 1_000_000
         )
-        if big and use_arrow("auto"):
+        if big:
             return assign_clusters_batched(df, vec_col, centroids)
     return assign_clusters(df, vec_col, centroids)
 

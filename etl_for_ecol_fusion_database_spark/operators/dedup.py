@@ -1061,22 +1061,13 @@ def semantic_dedup(
     from . import similarity
 
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    # two assignment strategies with identical output (exact-double argmin,
-    # ties to lowest index, bit-equal accumulation order): inlined literal
-    # folds stay inside one whole-stage-codegen projection up to ~32
-    # centroids; past that the per-(row, centroid) interpreted fold cost
-    # dominates, so large k switches to the Arrow-batched numpy kernel —
-    # the shape that holds when k scales with the corpus (SemDeDup wants
-    # constant cluster size, so k ~ N/size; a 100-TB corpus means
-    # thousands of centroids and a dense distance kernel, not k inlined
-    # expressions).  assign_clusters_join is the pure-JVM fallback with
-    # the same contract, DISPATCHED here when the Arrow kernel's deps
-    # (numpy/pandas/pyarrow) are absent — previously only described as a
-    # fallback, never selected (ADVICE r08).  All three paths are pinned
-    # bit-identical in tests/test_curation_ops.py.
-    if len(centroids) > 32 and not use_arrow("auto"):
-        assigned = clustering.assign_clusters_join(base, "v", centroids, "id")
-    elif len(centroids) > _HIERARCHICAL_K:
+    # flat assignment: ``assign_clusters_auto`` picks the inlined literal
+    # folds (one codegen projection; k <= 32 at small N) or the
+    # bit-identical Arrow-batched numpy kernel — the shape that holds when
+    # k scales with the corpus (SemDeDup wants constant cluster size, so
+    # k ~ N/size: thousands of centroids and a dense distance kernel, not
+    # k inlined expressions).
+    if len(centroids) > _HIERARCHICAL_K:
         # flat assignment is N x k x dim and SemDeDup's k grows with the
         # corpus (constant cluster size), so past this point the
         # assignment term is the pipeline's one latent super-linear cost —
@@ -1086,13 +1077,7 @@ def semantic_dedup(
         # stays the bit-exact oracle-checked path at every fixture scale
         # below the threshold.
         assigned = clustering.assign_clusters_hierarchical(base, "v", centroids)
-    elif len(centroids) > 32:
-        assigned = clustering.assign_clusters_batched(base, "v", centroids)
     else:
-        # k <= 32: defer to the measured size-aware dispatch — Arrow when
-        # row_count_hint puts N x k x dim past the ~1e6-step breakeven
-        # (SemDeDup call sites have parquet-footer counts for free), else
-        # the inline codegen folds.  All engines pinned bit-identical.
         assigned = clustering.assign_clusters_auto(
             base, "v", centroids, row_count_hint=row_count_hint
         )

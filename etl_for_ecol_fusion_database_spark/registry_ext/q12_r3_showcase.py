@@ -1987,11 +1987,11 @@ def x1_semdedup(spark, sf_dir):
     lowest-id vectors (the x8 seeding); for k > 32 the assignment runs as
     a matmul-pruned Arrow numpy kernel whose winners are decided by the
     fold's exact accumulation order (operators/clustering
-    .assign_clusters_batched; assign_clusters_join is the pure-JVM
-    fallback), and the within-cluster pair scoring runs as a
+    .assign_clusters_batched; the literal fold assign_clusters is its
+    JVM reference), and the within-cluster pair scoring runs as a
     groupBy(cluster).applyInPandas kernel whose keep/discard decision
-    stays Spark-side (semantic_dedup pair_kernel='arrow'; the fold join
-    is the parity anchor).  Fixture threshold 0.3 (production ~0.95: the
+    stays Spark-side (semantic_dedup's default pair_kernel; the fold
+    join is the parity anchor).  Fixture threshold 0.3 (production ~0.95: the
     synthetic embeddings are near-orthogonal, so 0.95 would be vacuous
     here).  Norms once per vector; one cluster-keyed shuffle + one
     anti-join."""

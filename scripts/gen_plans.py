@@ -1,7 +1,13 @@
 #!/usr/bin/env python
 """Regenerate docs/PLANS.md: formatted physical plans of the headline
 queries at sf0.01, as reviewable evidence of pushdown/pruning/broadcast/
-shuffle behavior (the properties tests/test_plan_quality.py pins)."""
+shuffle behavior (the properties tests/test_plan_quality.py pins).
+
+Each section is stamped with its query's witness fingerprint, so
+tests/test_doc_counts.py fails once a query's code moves past the plan
+shown here; rerun this script then.
+
+Usage:  python scripts/gen_plans.py"""
 
 from __future__ import annotations
 
@@ -71,7 +77,6 @@ SHOWCASE = [
     "x2_lsh_portable",
     # round 4
     "x3_profile_sketch",
-    "x3_ngram_lm_score",
     "x5_stream_curation_replay",
     "x2_pq_encode",
     "x3_zipf_slope",
@@ -119,8 +124,9 @@ SHOWCASE = [
 
 
 def main() -> None:
-    from etl_for_ecol_fusion_database_spark import registry
+    from etl_for_ecol_fusion_database_spark import registry, witness
 
+    fingerprints = witness.current_fingerprints()
     spark = measure.session("gen-plans", shuffle_partitions=8)
     out = [
         "# Physical plans (generated by scripts/gen_plans.py — do not edit)",
@@ -133,9 +139,10 @@ def main() -> None:
     ]
     for name in SHOWCASE:
         df = registry.QUERIES[name](spark, SF_DIR)
-        df.count()  # drive AQE to a final plan
+        df.collect()  # run df's own plan so AQE finalizes it (count() plans another query)
         plan = measure.plan_text(df, "executed")
-        out += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
+        out += [f"## {name}", f"Witness fingerprint: `{fingerprints[name]}`", ""]
+        out += ["```", plan.rstrip(), "```", ""]
     dest = os.path.join(measure.REPO, "docs", "PLANS.md")
     with open(dest, "w") as f:
         f.write("\n".join(out))

@@ -604,38 +604,6 @@ def test_curriculum_phases_quartile_sized_and_ordered(spark, sf_dir):
         assert max(by_phase[p]) <= min(by_phase[p + 1])
 
 
-def test_assign_clusters_join_path_matches_literal_path(spark, sf_dir):
-    """Round-8 scale fix: semantic_dedup's adaptive k switches to a
-    broadcast-join argmin past 32 centroids (inlined literal folds are
-    codegen-hostile at large k).  The two assignment strategies must be
-    bit-identical — same argmin, same lowest-index tie rule — and the
-    join path's plan must broadcast the centroid table, never shuffle it."""
-    from etl_for_ecol_fusion_database_spark.operators import clustering
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    seeds = [
-        [float(x) for x in r.v]
-        for r in emb.filter(F.col("vec_id") < 40).orderBy("vec_id").collect()
-    ]
-    lit_path = clustering.assign_clusters(emb, "v", seeds).select("vec_id", "cluster")
-    join_path = clustering.assign_clusters_join(emb, "v", seeds, "vec_id").select(
-        "vec_id", "cluster"
-    )
-    assert lit_path.exceptAll(join_path).count() == 0
-    assert join_path.exceptAll(lit_path).count() == 0
-    plan = join_path._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan
-    # the argmin reduction keeps PARTIAL aggregation (min_by over struct
-    # buffers plans as SortAggregate — a per-partition sort with map-side
-    # partial min, so the shuffle still carries one row per id, never the
-    # N*k joined rows)
-    assert "partial_min_by" in plan, plan[:400]
-    exchanges = plan.count("Exchange")
-    assert exchanges <= 3, plan[:400]  # broadcast + one keyed shuffle (+AQE read)
-
-
 def test_semdedup_adaptive_k_formula_matches_oracle():
     """The Spark side derives k from parquet-footer row counts; the oracle
     derives it from COUNT(*).  Pin the shared formula so an edit to one

@@ -3,7 +3,8 @@
 README.md and docs/OPERATORS.md each state the registry size; both
 drifted for two rounds before round 6 fixed them by hand.  Asserting the
 numbers here turns future drift into a test failure instead of a judge
-finding.  No Spark needed.
+finding.  docs/PLANS.md is held to the code the same way, through the
+witness fingerprint stamped on each plan.  No Spark needed.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_for_ecol_fusion_database_spark import registry
+from etl_for_ecol_fusion_database_spark import registry, witness
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -52,3 +53,24 @@ def test_operators_md_lists_every_query():
     extra = listed - set(registry.QUERIES)
     assert not missing, f"queries missing from docs/OPERATORS.md: {sorted(missing)}"
     assert not extra, f"docs/OPERATORS.md lists unregistered queries: {sorted(extra)}"
+
+
+def test_plans_md_sections_unique_and_current():
+    """Each docs/PLANS.md section shows one query's plan once, stamped
+    with the witness fingerprint of the code that produced it; a stamp
+    that no longer matches means the plan is stale (rerun
+    scripts/gen_plans.py)."""
+    text = _read(os.path.join("docs", "PLANS.md"))
+    sections = re.findall(
+        r"^## (\S+)\n(?:Witness fingerprint: `([0-9a-f]+)`)?", text, re.M
+    )
+    assert sections, "docs/PLANS.md has no plan sections"
+    names = [name for name, _ in sections]
+    repeated = sorted({n for n in names if names.count(n) > 1})
+    assert not repeated, f"docs/PLANS.md repeats sections: {repeated}"
+    current = witness.current_fingerprints()
+    stale = [name for name, stamp in sections if stamp != current.get(name)]
+    assert not stale, (
+        f"docs/PLANS.md plans are stale or unstamped for {stale}: "
+        "rerun scripts/gen_plans.py"
+    )

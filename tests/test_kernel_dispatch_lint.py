@@ -1,12 +1,14 @@
 """Static lint over the package source: fold/Arrow kernel dispatch goes
-through ``kernels.use_arrow``.
+through ``kernels.use_arrow``, and numpy, pandas and pyarrow are required.
 
 Six operators pair a fold plan with an Arrow kernel.  When each carried its
 own dispatch, the copies drifted: some rejected a misspelled kernel name,
 others silently ran the slow fold on it, and their ``"auto"`` rules
 differed.  This lint fails if any package code outside ``use_arrow``
-compares a ``kernel``/``pair_kernel`` argument to a string literal, or
-probes ``import pyarrow`` inside an ``ImportError`` handler.
+compares a ``kernel``/``pair_kernel`` argument to a string literal, or if
+any code at all imports numpy, pandas or pyarrow under an
+``ImportError``/``ModuleNotFoundError`` handler: the package does not run
+without them, so such a guard only keeps an unreachable path alive.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ PKG_DIR = os.path.dirname(os.path.abspath(pkg.__file__))
 #: the one dispatch function: (module path, function)
 DISPATCH = ("kernels.py", "use_arrow")
 KERNEL_ARGS = {"kernel", "pair_kernel"}
+REQUIRED_DEPS = {"numpy", "pandas", "pyarrow"}
 
 
 def _is_kernel_compare(node) -> bool:
@@ -35,7 +38,7 @@ def _is_kernel_compare(node) -> bool:
     return names and literal
 
 
-def _is_arrow_probe(node) -> bool:
+def _is_deps_probe(node) -> bool:
     if not isinstance(node, ast.Try):
         return False
     caught = {
@@ -49,16 +52,19 @@ def _is_arrow_probe(node) -> bool:
         return False
     for stmt in node.body:
         for n in ast.walk(stmt):
-            if isinstance(n, ast.Import) and any(a.name.split(".")[0] == "pyarrow" for a in n.names):
+            if isinstance(n, ast.Import) and any(
+                a.name.split(".")[0] in REQUIRED_DEPS for a in n.names
+            ):
                 return True
-            if isinstance(n, ast.ImportFrom) and (n.module or "").split(".")[0] == "pyarrow":
+            if isinstance(n, ast.ImportFrom) and (n.module or "").split(".")[0] in REQUIRED_DEPS:
                 return True
     return False
 
 
 def _dispatch_sites(path: str):
     """(function name, line, kind) of every kernel-name comparison and
-    pyarrow import probe in ``path``, attributed to its innermost function."""
+    guarded import of a required dependency in ``path``, attributed to its
+    innermost function."""
     tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
     found: list[tuple[str, int, str]] = []
 
@@ -67,8 +73,8 @@ def _dispatch_sites(path: str):
             name = child.name if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) else fn
             if _is_kernel_compare(child):
                 found.append((fn, child.lineno, "kernel-name comparison"))
-            if _is_arrow_probe(child):
-                found.append((fn, child.lineno, "pyarrow import probe"))
+            if _is_deps_probe(child):
+                found.append((fn, child.lineno, "guarded import of a required dependency"))
             walk(child, name)
 
     walk(tree, "<module>")
@@ -85,15 +91,16 @@ def test_kernel_dispatch_only_in_use_arrow():
             path = os.path.join(root, f)
             rel = os.path.relpath(path, PKG_DIR)
             for fn, line, kind in _dispatch_sites(path):
-                if (rel, fn) == DISPATCH:
+                if (rel, fn) == DISPATCH and kind == "kernel-name comparison":
                     kinds_in_dispatch.add(kind)
                 else:
                     offenders.append(f"{rel}:{line} in {fn}(): {kind}")
     assert not offenders, (
-        "kernel dispatch outside kernels.use_arrow (call it instead):\n"
+        "kernel dispatch outside kernels.use_arrow (call it instead), or an "
+        "import of a required dependency guarded as optional:\n"
         + "\n".join(offenders)
     )
     # the lint would pass vacuously if the dispatch moved or were renamed
-    assert kinds_in_dispatch == {"kernel-name comparison", "pyarrow import probe"}, (
+    assert kinds_in_dispatch == {"kernel-name comparison"}, (
         f"{DISPATCH} no longer holds the dispatch: found {kinds_in_dispatch}"
     )

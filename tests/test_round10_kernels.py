@@ -20,7 +20,8 @@ def test_batched_assignment_adversarial_ties_match_jvm(spark):
     DUPLICATE centroids (dup-heavy SemDeDup seed sets — first-min must
     pick the lowest copy), exact equidistance between DISTINCT centroids
     (mirror-symmetric pair), and rows equal to a centroid (d2 = 0).
-    Compared against the pure-JVM broadcast-join path on every row."""
+    Compared against the literal JVM fold ``assign_clusters`` on every
+    row."""
     from etl_for_ecol_fusion_database_spark.operators import clustering
 
     cents = [
@@ -46,7 +47,7 @@ def test_batched_assignment_adversarial_ties_match_jvm(spark):
     )
     jvm = {
         r.id: r.cluster
-        for r in clustering.assign_clusters_join(df, "v", cents, "id").collect()
+        for r in clustering.assign_clusters(df, "v", cents).collect()
     }
     batched = {
         r.id: r.cluster

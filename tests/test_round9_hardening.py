@@ -2,8 +2,7 @@
 
 Covers: the --accept-verified provenance guard, the newest-row-FAIL
 witness drop, the unresolved-module-attr coarse-hash fallback, the
-re-anchored-name rotation priority, the pinned bench stdout panel, and
-the semantic_dedup pure-JVM dispatch fallback.
+re-anchored-name rotation priority and the pinned bench stdout panel.
 """
 
 from __future__ import annotations
@@ -260,50 +259,3 @@ def test_pinned_bench_panel_matches_r08_sheet():
         assert n == "ingest_copy" or n in registry.QUERIES
     assert len(bench.PINNED_PANEL) == len(set(bench.PINNED_PANEL))
 
-
-# ------------------------------------------- semantic_dedup JVM dispatch
-
-
-def test_semantic_dedup_dispatches_to_join_path_without_arrow(
-    spark, sf_dir, monkeypatch
-):
-    """ADVICE r08: assign_clusters_join is documented as the pure-JVM
-    fallback — prove it is actually SELECTED when the Arrow kernel's deps
-    are unimportable, and that the fallback's answer matches the Arrow
-    path bit for bit."""
-    from pyspark.sql import functions as F
-
-    from etl_for_ecol_fusion_database_spark.operators import clustering, dedup
-
-    emb = (
-        spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        .select("vec_id", F.col("embedding").alias("v"))
-        .limit(200)
-    )
-    seeds = [
-        [float(x) for x in r.v]
-        for r in emb.orderBy("vec_id").limit(33).collect()
-    ]
-    calls: list[str] = []
-    real_batched = clustering.assign_clusters_batched
-    real_join = clustering.assign_clusters_join
-    monkeypatch.setattr(
-        clustering, "assign_clusters_batched",
-        lambda *a, **kw: calls.append("batched") or real_batched(*a, **kw),
-    )
-    monkeypatch.setattr(
-        clustering, "assign_clusters_join",
-        lambda *a, **kw: calls.append("join") or real_join(*a, **kw),
-    )
-
-    arrow = dedup.semantic_dedup(emb, seeds, id_col="vec_id", vec_col="v")
-    arrow_rows = sorted((r.id, r.cluster) for r in arrow.collect())
-    assert calls == ["batched"]
-
-    # make `import pyarrow` raise ImportError inside the dispatch
-    monkeypatch.setitem(sys.modules, "pyarrow", None)
-    calls.clear()
-    jvm = dedup.semantic_dedup(emb, seeds, id_col="vec_id", vec_col="v")
-    assert calls == ["join"]
-    jvm_rows = sorted((r.id, r.cluster) for r in jvm.collect())
-    assert jvm_rows == arrow_rows
