@@ -41,10 +41,10 @@ def _witnessed_names() -> frozenset[str]:
     this in round 4).  Failed rows never count, so regressions rotate back
     into the sample window automatically.
 
-    Round 7 (VERDICT round-6 item #1): the witness is also CHANGE-AWARE.
-    A green row only counts while the query's content fingerprint
-    (oracle SQL + callable source + referenced package functions/
-    constants/operator-module closure — see
+    The witness is also CHANGE-AWARE.  A green row only counts while the
+    query's content fingerprint (oracle SQL + the source of every package
+    symbol reachable from its decorated def, the registry wrapper and
+    parity conf included — see
     etl_for_ecol_fusion_database_spark/witness.py) still matches the
     snapshot recorded in docs/WITNESS_FP.json at the time of the witness
     (refreshed each round start by scripts/update_witness_fp.py).  A

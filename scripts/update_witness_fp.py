@@ -15,19 +15,12 @@ Rules applied:
 - names witnessed only in OLDER sheets keep their previously recorded
   fingerprint (their witness covers older code; if that code has since
   changed they are already stale and must stay stale);
-- ``--bootstrap`` additionally records current fingerprints for names
-  green in ANY sheet that have no recorded fingerprint yet (used once,
-  in round 7: every query edited after its round-6 witness was
-  independently re-verified via scripts/verify_local.py — VERDICT.md
-  round 6, "What's wrong" #1);
 - ``--accept-verified PATH`` records current fingerprints for names whose
   record in PATH (a scripts/verify_local.py results JSON — driver-identical
   canonicalization) shows hash_match true, or rows-only for an entry that
-  has no oracle.  Used when a fingerprint-ALGORITHM change (round 8's
-  module-handle narrowing) churns recorded fingerprints without any query
-  semantics changing: the queries are re-verified locally against the
-  current tree, the results file is committed under docs/ for audit, and
-  the witness is re-anchored to the verified code.  GUARDED since round 9
+  has no oracle: the queries are re-verified locally against the current
+  tree, the results file is committed under docs/ for audit, and the
+  witness is re-anchored to the verified code.  GUARDED since round 9
   (ADVICE r08): verify_local.py embeds the per-query fingerprint of the
   code it actually ran (``fp``); any entry whose recorded ``fp`` is
   missing or differs from the CURRENT fingerprint is refused with a
@@ -45,8 +38,15 @@ Rules applied:
   per-entry fingerprint guard makes it edit-safe) to record evidence
   for newly registered queries.
 
-Usage:  python scripts/update_witness_fp.py [--bootstrap] [--no-sheet]
-                                            [--accept-verified PATH]
+A fingerprint-ALGORITHM change is translated, not re-verified, when it
+lands on a tree with no stale name.  Each name gets its new-scheme
+fingerprint, except where code only the new scheme covers changed after
+the name's witness (its driver sheet's tree, or its re-anchor commit):
+such a name gets the new-scheme fingerprint of its witness's tree and so
+stays stale.  The switch to the static symbol graph was translated this
+way, by a one-off command recorded in CHANGES.md.
+
+Usage:  python scripts/update_witness_fp.py [--no-sheet] [--accept-verified PATH]
 """
 
 from __future__ import annotations
@@ -73,7 +73,6 @@ def _satisfactory(rec: dict, name: str) -> bool:
 
 
 def main() -> None:
-    bootstrap = "--bootstrap" in sys.argv[1:]
     sheets = sorted(
         glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")),
         key=lambda p: int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
@@ -152,23 +151,6 @@ def main() -> None:
             json.dump(dict(sorted(reanchor.items())), fh, indent=1)
             fh.write("\n")
 
-    boot = []
-    if bootstrap:
-        ever_green: set[str] = set()
-        for path in sheets:
-            try:
-                with open(path) as fh:
-                    sheet = json.load(fh)
-            except (OSError, ValueError):
-                continue
-            for name, rec in sheet.items():
-                if _satisfactory(rec, name):
-                    ever_green.add(name)
-        for name in ever_green:
-            if name in current and name not in recorded:
-                recorded[name] = current[name]
-                boot.append(name)
-
     pruned = [n for n in recorded if n not in current]
     for n in pruned:
         del recorded[n]
@@ -192,8 +174,6 @@ def main() -> None:
         )
         for n in sorted(rejected):
             print("  refused:", n)
-    if bootstrap:
-        print(f"bootstrapped: {len(boot)}")
     if pruned:
         print(f"pruned (unregistered): {pruned}")
     print(f"recorded total: {len(recorded)} / registered {len(current)}")

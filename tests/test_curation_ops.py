@@ -614,8 +614,8 @@ def test_semdedup_adaptive_k_formula_matches_oracle():
     assert "GREATEST(16, COUNT(*) // 125)" in sql
     import inspect
 
-    from etl_for_ecol_fusion_database_spark import witness
-    src = inspect.getsource(witness._unwrap(registry.QUERIES["x1_semdedup"]))
+    fn = inspect.getclosurevars(registry.QUERIES["x1_semdedup"]).nonlocals["fn"]
+    src = inspect.getsource(fn)
     assert "max(16, n // 125)" in src
 
 

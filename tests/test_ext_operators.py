@@ -423,26 +423,29 @@ def test_minhash_store_update_first_writer_wins_and_compacts(spark):
     assert {r.id for r in uncompacted.collect()} == {1, 2, 3, 4}
 
 
+def _ref_bpe(word, merges):
+    """Reference per-symbol greedy BPE: merges in priority order, each
+    applied leftmost and non-overlapping."""
+    syms = list(word)
+    for a, b in merges:
+        out, i = [], 0
+        while i < len(syms):
+            if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
+                out.append(a + b)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        syms = out
+    return syms
+
+
 def test_bpe_encode_matches_reference_greedy_merges(spark):
     """The chained fixpoint-replace plan must reproduce a reference
     per-symbol greedy BPE (leftmost non-overlapping, merges in priority
     order) on adversarial words: overlapping runs, chained merges,
     merge-result-as-operand."""
     from etl_for_ecol_fusion_database_spark.operators import text as text_ops
-
-    def ref_bpe(word, merges):
-        syms = list(word)
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
 
     merges = list(text_ops.BPE_MERGES) + [("a", "a"), ("aa", "aa")]
     words = [
@@ -458,7 +461,7 @@ def test_bpe_encode_matches_reference_greedy_merges(spark):
         ).collect()
     }
     for w in words:
-        assert got[w] == ref_bpe(w, merges), w
+        assert got[w] == _ref_bpe(w, merges), w
         assert "".join(got[w]) == w  # decode round-trip
 
 
@@ -520,20 +523,6 @@ def test_bpe_encode_hypothesis_vs_reference(spark):
 
     from etl_for_ecol_fusion_database_spark.operators import text as text_ops
 
-    def ref_bpe(word, merges):
-        syms = list(word)
-        for a, b in merges:
-            out, i = [], 0
-            while i < len(syms):
-                if i < len(syms) - 1 and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return syms
-
     merges = list(text_ops.BPE_MERGES)
     alphabet = sorted({c for m in merges for c in m[0] + m[1]})
     rng = random.Random(13)
@@ -549,7 +538,7 @@ def test_bpe_encode_hypothesis_vs_reference(spark):
         ).collect()
     }
     for w in words:
-        assert got[w] == ref_bpe(w, merges), w
+        assert got[w] == _ref_bpe(w, merges), w
         assert "".join(got[w]) == w
 
 

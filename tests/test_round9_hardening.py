@@ -1,8 +1,8 @@
 """Round-9 hardening (VERDICT r08 items #1/#3/#5 + ADVICE r08).
 
 Covers: the --accept-verified provenance guard, the newest-row-FAIL
-witness drop, the unresolved-module-attr coarse-hash fallback, the
-re-anchored-name rotation priority and the pinned bench stdout panel.
+witness drop, the re-anchored-name rotation priority and the pinned
+bench stdout panel.
 """
 
 from __future__ import annotations
@@ -66,22 +66,6 @@ def test_rows_only_after_gaining_oracle_is_not_a_regression(tmp_path, monkeypatc
     (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({name: rows_only}))
     last = entrymod._last_witness_round(str(tmp_path))
     assert last.get(name) == 1
-
-
-def test_unresolved_module_attr_adds_coarse_hash():
-    """ADVICE r08: when a statically-detected ``mod.attr`` can't be
-    resolved at runtime, the contribution must include the whole-file
-    closure hash (over-invalidate), not only the bare ``miss:`` marker
-    that covered none of the module's code."""
-    modname = "etl_for_ecol_fusion_database_spark.operators.similarity"
-    parts: set[str] = set()
-    witness._collect_module_narrowed(
-        modname, frozenset({"no_such_attr_xyz"}), parts, set(), 0
-    )
-    assert f"miss:{modname}.no_such_attr_xyz" in parts
-    assert any(
-        p.startswith("mod:") and "operators.similarity=" in p for p in parts
-    ), sorted(parts)
 
 
 # ------------------------------------------------- accept-verified guard
