@@ -120,10 +120,11 @@ def _rotated_names() -> list[str]:
     """Registration order, partitioned so unwitnessed entries come first
     (the driver's CORRECTNESS sheet samples only the first 50).
 
-    Within the unwitnessed block: explicit priorities first, then TPC-H
-    queries, then oracle-backed ext entries in registration order, then
-    rows-only entries (weaker driver check — spend sample slots on the
-    hash-checkable ones first).  The already-witnessed tail is ordered
+    The block opens with the explicit priorities, then every name in the
+    re-anchor ledger still awaiting a driver row (stale or not), then the
+    other unwitnessed entries: TPC-H queries, then oracle-backed ext
+    entries in registration order, then rows-only entries (weaker driver
+    check — spend sample slots on the hash-checkable ones first).  The already-witnessed tail is ordered
     least-recently-witnessed-first, so spare sample slots refresh the
     oldest evidence (e.g. the x4 multimodal family, VERDICT r07 item #8)
     instead of re-running whatever registered first.
@@ -155,20 +156,23 @@ def _rotated_names() -> list[str]:
         reanchored = {}
     witnessed = _witnessed_names()
     names = list(registry.QUERIES)
+    last_round = _last_witness_round()
     priority = [n for n in priority if n in names and n not in witnessed]
+    # ledger names lead whether their re-anchored fingerprint still holds
+    # or went stale again: an edit reaching most queries must not push
+    # them out of the window behind names with a driver row of their own
+    ledger = [
+        n for n in names
+        if n not in priority and last_round.get(n, 0) <= reanchored.get(n, -1)
+    ]
     unseen = [
         n for n in names
-        if n not in witnessed and n not in priority
+        if n not in witnessed and n not in priority and n not in ledger
     ]
-    last_round = _last_witness_round()
     order = {n: i for i, n in enumerate(names)}
     seen = sorted(
-        (n for n in names if n in witnessed),
-        key=lambda n: (
-            0 if last_round.get(n, 0) <= reanchored.get(n, -1) else 1,
-            last_round.get(n, 0),
-            order[n],
-        ),
+        (n for n in names if n in witnessed and n not in ledger),
+        key=lambda n: (last_round.get(n, 0), order[n]),
     )
     tpch = [n for n in unseen if n.startswith("q") and n[1].isdigit()]
     rest_oracled = [
@@ -177,7 +181,7 @@ def _rotated_names() -> list[str]:
     rest_rows_only = [
         n for n in unseen if n not in tpch and n not in registry.ORACLES
     ]
-    return priority + tpch + rest_oracled + rest_rows_only + seen
+    return priority + ledger + tpch + rest_oracled + rest_rows_only + seen
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -15,6 +15,7 @@ reflection comes straight off ``DataFrame.schema``.
 from __future__ import annotations
 
 import os
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,6 +87,23 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
+def _data_files(path: str):
+    """The data files of a parquet table, in sorted order: ``path`` itself
+    when it is not a directory, else every ``*.parquet`` file below it.
+
+    Spark's readers skip hidden and staging entries ('.' and '_' prefixes,
+    e.g. an aborted write's '.part-….parquet' or '_temporary/'), so the
+    walk skips them too: a footer figure must describe what Spark reads."""
+    if not os.path.isdir(path):
+        yield path
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                yield os.path.join(root, f)
+
+
 def table_row_count(sf_dir: str, name: str) -> int:
     """Exact row count from parquet FOOTER metadata — a driver-side
     O(footer) read, zero Spark jobs.
@@ -100,19 +118,9 @@ def table_row_count(sf_dir: str, name: str) -> int:
     """
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        total = 0
-        for root, dirs, files in os.walk(path):
-            # Spark readers skip hidden/staging entries ('.', '_' prefixes,
-            # e.g. an aborted write's '.part-….parquet' or '_temporary/');
-            # the footer count must match what Spark would actually read
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith((".", "_")):
-                    total += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        return total
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        pq.read_metadata(f).num_rows for f in _data_files(table_path(sf_dir, name))
+    )
 
 
 def effective_scan_parallelism(sf_dir: str, name: str, cap: int = 1 << 30) -> int:
@@ -133,20 +141,12 @@ def effective_scan_parallelism(sf_dir: str, name: str, cap: int = 1 << 30) -> in
     hold no row that survives pushed filters."""
     import pyarrow.parquet as pq
 
-    path = table_path(sf_dir, name)
-    if os.path.isdir(path):
-        total = 0
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-            for f in files:
-                if f.endswith(".parquet") and not f.startswith((".", "_")):
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_row_groups
-                    if total >= cap:
-                        return total
-        return total
-    return pq.ParquetFile(path).metadata.num_row_groups
+    total = 0
+    for f in _data_files(table_path(sf_dir, name)):
+        total += pq.read_metadata(f).num_row_groups
+        if total >= cap:
+            break
+    return total
 
 
 def load_table_rebalanced(
@@ -194,15 +194,108 @@ NANOS_TIMESTAMP_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one fixture table (S1/S3 analogue: full table scan as a lazy
-    parquet source instead of a driver-side ``fetchall`` —
-    /root/reference/helper_db_operation.py:19-26)."""
+    parquet source instead of a driver-side ``fetchall`` — the
+    reference's helper_db_operation.py:19-26).
+
+    The schema comes from the table's parquet footer on the driver
+    (:func:`read_parquet`), as the reference reads column types from
+    catalog metadata without scanning data (helper_db_operation.py:32-43):
+    loading a table runs no Spark job.  The path must be local."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     for col in NANOS_TIMESTAMP_COLS.get(name, ()):
         if col in df.columns and isinstance(df.schema[col].dataType, T.LongType):
             # integer division — float division loses precision on ns epochs
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
     return df
+
+
+#: footer key under which Spark stores the schema of a file it wrote; its
+#: own schema inference reads this key first (ParquetFileFormat)
+SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema read from a parquet
+    footer on the driver, so no Spark job runs to infer it.
+
+    A bare ``spark.read.parquet`` launches a one-task job
+    (``mergeSchemasInParallel``) to read one footer.  Here the first data
+    file of a sorted walk (skipping '.'/'_' entries, :func:`_data_files`)
+    gives the schema, and Spark gets it through ``.schema(...)``:
+
+    - a file Spark wrote carries its Spark schema as JSON under
+      :data:`SPARK_ROW_METADATA`, the key Spark's own inference reads, so
+      the result is identical;
+    - any other file's Arrow schema is mapped for the types the fixtures
+      hold (:func:`_spark_type`); any other type raises ``ValueError``.
+
+    Partition columns still come from the directory names: Spark appends
+    them to a given data schema.  Only local paths are read (a URI raises
+    ``ValueError``); a missing path or one without a data file gets
+    Spark's own error.  There is no fallback to inference."""
+    if urlsplit(path).scheme:
+        raise ValueError(f"read_parquet: {path!r} is not a local path")
+    first = next(_data_files(path), None) if os.path.exists(path) else None
+    if first is None:
+        # no footer to read: Spark raises PATH_NOT_FOUND for a missing
+        # path and UNABLE_TO_INFER_SCHEMA for a directory without data
+        spark.read.parquet(path)
+        raise ValueError(f"read_parquet: no parquet data file under {path!r}")
+    return spark.read.schema(_footer_schema(spark, first)).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The Spark schema of one parquet file, from its footer alone."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(path)
+    spark_json = (pf.metadata.metadata or {}).get(SPARK_ROW_METADATA)
+    if spark_json is not None:
+        return T.StructType.fromJson(json.loads(spark_json))
+    nanos_as_long = (
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+    )
+    return T.StructType(
+        [
+            T.StructField(f.name, _spark_type(path, f, nanos_as_long), True)
+            for f in pf.schema_arrow
+        ]
+    )
+
+
+def _spark_type(path: str, field, nanos_as_long: bool) -> T.DataType:
+    """The type Spark's parquet reader infers for one Arrow field written
+    by a non-Spark writer, for exactly the types the fixtures hold.
+    Timestamps: microseconds without a zone read as TIMESTAMP_NTZ, with a
+    zone (stored UTC-adjusted) as TIMESTAMP, and nanoseconds as LONG under
+    ``spark.sql.legacy.parquet.nanosAsLong``."""
+    import pyarrow as pa
+
+    t = field.type
+    simple = {
+        pa.int32(): T.IntegerType(),
+        pa.int64(): T.LongType(),
+        pa.float32(): T.FloatType(),
+        pa.float64(): T.DoubleType(),
+        pa.string(): T.StringType(),
+        pa.timestamp("us"): T.TimestampNTZType(),
+    }
+    if t in simple:
+        return simple[t]
+    if pa.types.is_timestamp(t) and t.unit == "us" and t.tz is not None:
+        return T.TimestampType()
+    if pa.types.is_timestamp(t) and t.unit == "ns" and nanos_as_long:
+        return T.LongType()
+    if pa.types.is_list(t) and t.value_type == pa.float32():
+        return T.ArrayType(T.FloatType(), True)
+    raise ValueError(
+        f"read_parquet: {path}: column {field.name!r} has parquet type {t}, "
+        "which has no footer mapping; write the file with Spark or extend "
+        "catalog._spark_type"
+    )
 
 
 def load_sampled(spark: SparkSession, sf_dir: str, name: str, n: int) -> DataFrame:

@@ -174,3 +174,33 @@ def _rt_tmpdir(prefix: str, sf_dir: str) -> str:
         _RT_DIRS[key] = out
         atexit.register(shutil.rmtree, out, ignore_errors=True)
     return _RT_DIRS[key]
+
+
+#: the dirs of the last call of each query that replaces its temp dirs on
+#: every call; never emptied once set, so the exit hook registers once
+_REPLACED_DIRS: dict = {}
+
+
+def _replace_tmpdirs(owner: str, *prefixes: str) -> list[str]:
+    """Fresh temp dirs, one per prefix, for a query that writes and reads
+    back its own files on every call: the dirs of ``owner``'s previous
+    call are removed first, and the last call's at interpreter exit, as
+    :func:`_rt_tmpdir`'s are."""
+    import atexit
+    import shutil
+    import tempfile
+
+    if not _REPLACED_DIRS:
+        atexit.register(_remove_replaced_dirs)
+    for d in _REPLACED_DIRS.pop(owner, ()):
+        shutil.rmtree(d, ignore_errors=True)
+    _REPLACED_DIRS[owner] = [tempfile.mkdtemp(prefix=p) for p in prefixes]
+    return _REPLACED_DIRS[owner]
+
+
+def _remove_replaced_dirs() -> None:
+    import shutil
+
+    for dirs in _REPLACED_DIRS.values():
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)

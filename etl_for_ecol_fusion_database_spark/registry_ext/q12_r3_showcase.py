@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from ..catalog import load_table  # noqa: F401
+from ..catalog import load_table, read_parquet  # noqa: F401
 from ..operators import dedup, multimodal, sampling, similarity, text  # noqa: F401
 from ..registry import query  # noqa: F401
 from ._shared import (  # noqa: F401
@@ -22,6 +22,7 @@ from ._shared import (  # noqa: F401
     _STOP_LIST,
     _embedding_head,
     _marker_list,
+    _replace_tmpdirs,
     _rt_tmpdir,
     _t,
     _with_synthetic_near_dups,
@@ -1590,11 +1591,6 @@ def x12_column_profile(spark, sf_dir):
     return stacked
 
 
-#: temp dirs of the previous x5_stream_curation_replay invocation — freed on
-#: the next call so long-lived sessions don't accumulate sink/checkpoint dirs
-_STREAM_REPLAY_DIRS: list = []
-
-
 @query(
     "x5_stream_curation_replay",
     oracle=rf"""
@@ -1636,16 +1632,14 @@ def x5_stream_curation_replay(spark, sf_dir):
     docstring); the sink is append-only parquet — the same shape that runs
     continuously on a real bucket listing."""
     import shutil
-    import tempfile
 
     from ..streaming import docs_stream
 
-    while _STREAM_REPLAY_DIRS:
-        shutil.rmtree(_STREAM_REPLAY_DIRS.pop(), ignore_errors=True)
-    dest = tempfile.mkdtemp(prefix="stream_replay_sink_")
-    ckpt = tempfile.mkdtemp(prefix="stream_replay_ckpt_")
-    srcdir = tempfile.mkdtemp(prefix="stream_replay_src_")
-    _STREAM_REPLAY_DIRS.extend([dest, ckpt, srcdir])
+    # a long-lived session keeps one call's sink/checkpoint dirs, not all
+    dest, ckpt, srcdir = _replace_tmpdirs(
+        "x5_stream_curation_replay",
+        "stream_replay_sink_", "stream_replay_ckpt_", "stream_replay_src_",
+    )
     # the file stream source lists a DIRECTORY (arrival simulation); stage
     # the fixture file into one
     shutil.copy(f"{sf_dir}/documents.parquet", f"{srcdir}/documents.parquet")
@@ -1653,7 +1647,7 @@ def x5_stream_curation_replay(spark, sf_dir):
     src = docs_stream.read_documents_stream(spark, srcdir)
     q = docs_stream.run_curation_to_parquet(src, dest, ckpt)
     q.awaitTermination()
-    return spark.read.parquet(dest).select("fingerprint", "lang")
+    return read_parquet(spark, dest).select("fingerprint", "lang")
 
 
 @query(
@@ -1841,10 +1835,6 @@ def x12_drift_psi(spark, sf_dir):
     )
 
 
-#: temp dirs of the previous s18_jsonl_roundtrip invocation
-_JSONL_DIRS: list = []
-
-
 @query(
     "s18_jsonl_roundtrip",
     oracle="""
@@ -1860,13 +1850,7 @@ def s18_jsonl_roundtrip(spark, sf_dir):
     LLM-corpus tooling speaks; at scale the same two calls target an object
     store and the write is one narrow pass (no shuffle), partition-parallel
     on both sides."""
-    import shutil
-    import tempfile
-
-    while _JSONL_DIRS:
-        shutil.rmtree(_JSONL_DIRS.pop(), ignore_errors=True)
-    out = tempfile.mkdtemp(prefix="jsonl_roundtrip_")
-    _JSONL_DIRS.append(out)
+    (out,) = _replace_tmpdirs("s18_jsonl_roundtrip", "jsonl_roundtrip_")
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
     docs.write.mode("overwrite").json(out)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from ..catalog import load_table, local_relation  # noqa: F401
+from ..catalog import load_table, local_relation, read_parquet  # noqa: F401
 from ..operators import dedup, multimodal, sampling, similarity, text  # noqa: F401
 from ..registry import query  # noqa: F401
 from ._shared import (  # noqa: F401
@@ -525,7 +525,7 @@ def _ivf_pq_search(spark, sf_dir, index_sink: str | None = None):
         # really write the artifact and serve from the files — lineage
         # truncation comes free with the round trip
         base.write.mode("overwrite").parquet(index_sink)
-        base = spark.read.parquet(index_sink)
+        base = read_parquet(spark, index_sink)
     else:
         base = base.localCheckpoint(eager=False)
     dexpr = None

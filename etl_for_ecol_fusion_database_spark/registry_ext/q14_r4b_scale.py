@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from ..catalog import load_table  # noqa: F401
+from ..catalog import load_table, read_parquet  # noqa: F401
 from ..operators import dedup, multimodal, sampling, similarity, text  # noqa: F401
 from ..registry import query  # noqa: F401
 from ._shared import (  # noqa: F401
@@ -1542,7 +1542,7 @@ def s24_partition_pruned_read(spark, sf_dir):
         F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day"),
     )
     ev.write.mode("overwrite").partitionBy("day").parquet(out)
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     # partition-type inference reads `day` back as DATE; pin the output
     # dtype to the written string so the witness is inference-independent
     return back.filter(F.col("day") == "2024-01-10").select(

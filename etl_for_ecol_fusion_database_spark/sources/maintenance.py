@@ -27,6 +27,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
+
 
 def _dir_bytes_and_files(path: str) -> tuple[int, int]:
     total, n = 0, 0
@@ -59,7 +61,7 @@ def compact_parquet(
     """
     bytes_now, _ = _dir_bytes_and_files(path)
     n_files = max(1, round(bytes_now / (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     df.coalesce(n_files).write.mode("overwrite").parquet(dest)
     return n_files
 
@@ -180,7 +182,7 @@ def table_storage_info(spark: SparkSession, path: str) -> TableStorageInfo:
     on-demand catalog queries (parquet's "indexes" are its row-group
     min/max stats, whose health is file-size/count hygiene)."""
     total, n_files = _dir_bytes_and_files(path)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     return TableStorageInfo(
         path=path,
         n_files=n_files,

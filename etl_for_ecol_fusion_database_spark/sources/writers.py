@@ -29,6 +29,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import read_parquet
 from .readers import JdbcSource
 
 PREFIXES = ("oracle_", "analytics_", "fusion_")
@@ -74,7 +75,7 @@ class ParquetSink:
         from pyspark.errors import AnalysisException
 
         try:
-            spark.read.parquet(self.path(table)).schema
+            read_parquet(spark, self.path(table))
             return False
         except AnalysisException as e:
             msg = str(e)

@@ -12,10 +12,36 @@ Usage:  python scripts/gen_plans.py"""
 from __future__ import annotations
 
 import os
+import re
 
 import measure
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", f"{measure.FIXTURES}/sf0.01")
+#: a temp dir named in a FileScan location: the queries that write and read
+#: back their own files make a fresh, randomly named one per session
+TMP_DIR = re.compile(
+    r"(?:file:)?/[^\s\[\](),]*?/((?:stream_replay_sink|part_events)_)[a-z0-9_]{8}"
+)
+#: numbers a session hands out in the order it plans and runs things:
+#: expression ids, exchange plan ids, AQE query stages, codegen stages
+SESSION_IDS = (r"#(\d+)", r"plan_id=(\d+)", r"QueryStage (\d+)", r"\*\((\d+)\)")
+
+
+def canonical_plan(plan: str) -> str:
+    """``plan`` with its temp dirs replaced by a placeholder and each kind
+    of session id renumbered in order of first appearance, so an unchanged
+    plan prints the same text in every session."""
+    plan = TMP_DIR.sub(r"<tmp>/\1*", plan)
+    for pattern in SESSION_IDS:
+        ids: dict[str, int] = {}
+
+        def renumber(m: re.Match) -> str:
+            n = ids.setdefault(m.group(1), len(ids) + 1)
+            start, end = m.span(1)
+            return m.string[m.start():start] + str(n) + m.string[end:m.end()]
+
+        plan = re.sub(pattern, renumber, plan)
+    return plan
 
 SHOWCASE = [
     "flagship_valid_cohort",
@@ -140,7 +166,7 @@ def main() -> None:
     for name in SHOWCASE:
         df = registry.QUERIES[name](spark, SF_DIR)
         df.collect()  # run df's own plan so AQE finalizes it (count() plans another query)
-        plan = measure.plan_text(df, "executed")
+        plan = canonical_plan(measure.plan_text(df, "executed"))
         out += [f"## {name}", f"Witness fingerprint: `{fingerprints[name]}`", ""]
         out += ["```", plan.rstrip(), "```", ""]
     dest = os.path.join(measure.REPO, "docs", "PLANS.md")

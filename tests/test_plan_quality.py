@@ -539,10 +539,9 @@ def test_partition_pruned_read_prunes_to_one_day(spark, sf_dir):
 def test_knn_join_plan_construction_runs_no_spark_jobs(spark, sf_dir):
     """Round 7 (round-5/6 ADVICE): x2_knn_join's adaptive signature width
     now comes from parquet footer metadata (catalog.table_row_count), not
-    an eager count() job — plan rendering must be side-effect-free.  The
-    only jobs allowed during construction are Spark's own parquet
-    schema-inference listings ('parquet at ...'), which every DataFrame
-    build over files incurs; a 'count at ...' job here is the regression."""
+    an eager count() job — plan rendering must be side-effect-free.  Table
+    loads read their schemas from parquet footers on the driver
+    (catalog.read_parquet), so construction runs no Spark job at all."""
     from etl_for_ecol_fusion_database_spark.registry_ext import q14_r4b_scale
 
     q14_r4b_scale._KNN_CORPUS_COUNT.clear()
@@ -556,8 +555,7 @@ def test_knn_join_plan_construction_runs_no_spark_jobs(spark, sf_dir):
     # force full physical planning without execution
     df._jdf.queryExecution().executedPlan().toString()
     new = job_names() - before
-    offenders = [n for _, n in new if not n.startswith("parquet at")]
-    assert not offenders, f"plan construction ran Spark jobs: {offenders}"
+    assert not new, f"plan construction ran Spark jobs: {sorted(new)}"
 
 
 def test_table_row_count_matches_spark_count(spark, sf_dir):

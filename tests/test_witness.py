@@ -145,8 +145,8 @@ def test_comment_docstring_and_whitespace_edits_move_nothing(tmp_path, monkeypat
         _replace("catalog.py", "# integer division — float division",
                  "# integer division (edited) — float division"),
         _replace("catalog.py", '"""Scan one fixture table', '"""Scan ONE fixture table'),
-        _replace("catalog.py", "df = spark.read.parquet(table_path(sf_dir, name))",
-                 "df = spark.read.parquet( table_path(sf_dir,name) )\n"),
+        _replace("catalog.py", "df = read_parquet(spark, table_path(sf_dir, name))",
+                 "df = read_parquet( spark,table_path(sf_dir,name) )\n"),
     )
     assert after == base
 
@@ -355,24 +355,27 @@ def test_stale_names_empty_set_when_no_snapshot(monkeypatch):
 
 def test_stale_query_reenters_rotation(monkeypatch):
     """The integration property: a sheet-green name whose fingerprint no
-    longer matches must come FIRST in queries() ordering (back into the
-    driver's 50-slot sample window)."""
+    longer matches must come before every name a driver row still
+    witnesses (back into the driver's 50-slot sample window).  Names in
+    the re-anchor ledger awaiting a driver row lead the window on their
+    own.  The stale set is pinned, so the property does not depend on how
+    many fingerprints have moved since the last driver sheet."""
+    monkeypatch.setattr(witness, "stale_names", lambda: frozenset())
     names = list(entrymod.queries())
+    last = entrymod._last_witness_round()
+    ledger = {
+        n for n, rnd in witness.reanchored_rounds().items() if last.get(n, 0) <= rnd
+    }
     witnessed = entrymod._witnessed_names()
     # pick a name currently in the 'seen' tail so the move is visible
-    target = next(n for n in reversed(names) if n in witnessed)
+    target = next(n for n in reversed(names) if n in witnessed and n not in ledger)
 
-    real_stale = witness.stale_names
-
-    def fake_stale():
-        return real_stale() | frozenset([target])
-
-    monkeypatch.setattr(witness, "stale_names", fake_stale)
+    monkeypatch.setattr(witness, "stale_names", lambda: frozenset([target]))
     names2 = list(entrymod.queries())
     still_witnessed = entrymod._witnessed_names()
     assert target not in still_witnessed
     first_witnessed_idx = min(
-        i for i, n in enumerate(names2) if n in still_witnessed
+        i for i, n in enumerate(names2) if n in still_witnessed and n not in ledger
     )
     # the newly-stale name orders before every still-witnessed one
     assert names2.index(target) < first_witnessed_idx
