@@ -215,11 +215,17 @@ def assign_clusters_auto(
     policy — k inlined expressions stop fitting one projection) OR when
     ``row_count_hint`` puts N x k x dim above ~1e6 interpreted steps
     (parquet-footer row counts at the call sites — zero Spark jobs).
-    The ~1e6-step breakeven comes from the measured constants: one Arrow
-    pass costs ~0.2-0.4 s (python worker round-trip + serialization) and
+    The ~1e6-step breakeven came from the round-10 constants: one Arrow
+    pass cost ~0.2-0.4 s (python worker round-trip + serialization) and
     one interpreted fold step ~0.3-0.5 us, so kmeans_elbow's many tiny
     passes (<=0.8e6 steps each) stay inline while the IVF coarse argmin
-    at 10x data (2e8 steps) takes the kernel.  The kernel's winners are
+    at 10x data (2e8 steps) takes the kernel.  Most of that pass cost was
+    the workers re-parsing ``pyspark.zip`` before every task, which the
+    ``pyspark_ecol_worker`` entry of ``session.get_spark`` removes.
+    Re-measured on 4 vCPUs (64 cached sf0.1 embeddings, k=8, dim 64,
+    median of 9 noop writes, minus the bare scan): one Arrow pass
+    0.23 s without that entry, 0.055-0.062 s with it.  The threshold is
+    not re-derived here (ROADMAP item 7).  The kernel's winners are
     pinned bit-identical to the folds (including duplicate-centroid and
     exact-tie cases, tests/test_round10_kernels.py), so every
     DuckDB-oracle replay is unaffected by which engine runs."""

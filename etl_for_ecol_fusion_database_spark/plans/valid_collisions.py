@@ -30,12 +30,22 @@ precision (sql:83, PG coerces the DATE to midnight).  Events on the cutoff
 day after midnight pass stage 5 but fail stage 6 — that is the reference's
 declared behavior and the oracle SQL mirrors it.
 
-Scale posture: the cutoff dim is a ~21-row literal -> explicit
-``F.broadcast``; the status-history join is an equi-join on collision_id
-(hash-partitioned, AQE-managed) with the range conjunct evaluated post-probe;
-both window passes share the collision_id partitioning of the join output, so
-the whole plan has exactly ONE shuffle of the big table (by collision_id) —
-the groupBy(min), join, and both row_numbers all reuse it.
+Scale posture (the committed plan, docs/PLANS.md § flagship_valid_cohort):
+the cutoff dim is a ~21-row literal -> explicit ``F.broadcast``.  ``events``
+is scanned twice.  The first scan feeds the groupBy(min), whose exchange by
+collision_id is the plan's one shuffle of ``events``.  The second scan is
+the status history, which sits under ``autoBroadcastJoinThreshold`` at the
+fixture scales, so Catalyst broadcasts the whole history and probes it
+with a BroadcastHashJoin on collision_id, the range conjunct a post-probe
+condition.  Both row_number windows reuse the aggregate's collision_id
+partitioning (a broadcast join keeps its stream side's partitioning); the
+final sort by case_nbr adds a range exchange.  A history above the
+threshold is shuffled on collision_id instead.
+
+Measured and rejected (sf0.05, 4 vCPUs): a window-``MIN`` rewrite of CTEs
+1-5 (one ``events`` scan) gave identical rows (290; ``exceptAll`` empty
+both ways) and 6 -> 5 jobs, but ``plans.fusion_write_s`` did not move
+(min 664 vs 666 ms over 11 runs each).
 """
 
 from __future__ import annotations
@@ -116,10 +126,11 @@ def status_on_cutoff(cutoff_assigned: DataFrame, status_history: DataFrame) -> D
     """J2+P9+W1 (sql:59-77): join status history rows at-or-before the
     cutoff (date precision) and rank latest-first.
 
-    The equi key (collision_id) drives a shuffle hash/sort-merge join; the
-    range conjunct ``effective_date::DATE <= cutoff_end_date`` is evaluated
-    on the probe side (no extra shuffle).  The subsequent window reuses the
-    collision_id partitioning.
+    The equi key (collision_id) drives a hash join: at the fixture scales
+    the history is broadcast whole (a sort-merge join on collision_id
+    above ``autoBroadcastJoinThreshold``).  The range conjunct
+    ``effective_date::DATE <= cutoff_end_date`` is a post-probe condition,
+    and the window reuses the cohort side's collision_id partitioning.
     """
     cwc = cutoff_assigned.alias("cwc")
     csh = status_history.alias("csh")

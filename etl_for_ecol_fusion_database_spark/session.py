@@ -54,6 +54,17 @@ SCALE_CONF: dict[str, str] = {
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
 }
 
+#: launch conf for the Python workers (not parity: results do not depend
+#: on it).  ``pyspark_ecol_worker`` (beside the package) stops every task
+#: from re-parsing ``pyspark.zip``; the name must start with ``pyspark``,
+#: or ``pyspark.daemon`` silently falls back to ``pyspark.worker``.
+WORKER_CONF: dict[str, str] = {
+    "spark.python.worker.module": "pyspark_ecol_worker",
+}
+
+#: the directory holding the package and the worker module
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def pin_parity_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable parity conf to an existing session."""
@@ -76,14 +87,17 @@ def get_spark(
 
     On a real cluster the same declarative plans run unchanged; only
     ``master`` / partition counts differ (AQE owns shuffle sizing either
-    way).
+    way).  The Python workers get :data:`PACKAGE_ROOT` on their path
+    (ahead of any ``spark.executorEnv.PYTHONPATH`` in ``extra_conf``), so
+    they import this package and the worker module from any working
+    directory.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
     )
-    for k, v in {**SCALE_CONF, **PARITY_CONF}.items():
+    for k, v in {**SCALE_CONF, **WORKER_CONF, **PARITY_CONF}.items():
         builder = builder.config(k, v)
     builder = builder.config(
         "spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus))
@@ -91,7 +105,10 @@ def get_spark(
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config("spark.ui.showConsoleProgress", "false")
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     return pin_parity_conf(spark)

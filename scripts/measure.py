@@ -7,9 +7,9 @@ live here once, so every artifact that compares timings was measured the
 same way.
 
 Importing this module puts the checkout it lives in at the front of
-``sys.path``; ``session`` also hands that checkout to Spark's Python
-workers through ``PYTHONPATH``, so driver and workers import one tree
-whatever the working directory.
+``sys.path``; ``get_spark`` hands the package's checkout to Spark's Python
+workers (``spark.executorEnv.PYTHONPATH``), so driver and workers import
+one tree whatever the working directory.
 """
 
 from __future__ import annotations
@@ -30,14 +30,9 @@ SMOKE_DIR = f"{FIXTURES}/sf0.001"
 
 
 def session(app: str, **conf):
-    """``get_spark(app, **conf)`` with quiet logs, its Python workers
-    importing the same package tree as this driver."""
-    import etl_for_ecol_fusion_database_spark as pkg
+    """``get_spark(app, **conf)`` with quiet logs."""
     from etl_for_ecol_fusion_database_spark.session import get_spark
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(pkg.__file__)))
-    os.environ["PYTHONPATH"] = os.pathsep.join(
-        p for p in (root, os.environ.get("PYTHONPATH")) if p)
     spark = get_spark(app, **conf)
     spark.sparkContext.setLogLevel("ERROR")
     return spark

@@ -14,7 +14,14 @@ lives once in ``scripts/measure.py``.  This lint fails if
   round as an argument instead;
 - a package module other than ``session.py`` and ``operators/barrier.py``
   reads a ``SPARK_GRAFT_*`` variable: a plan chosen by an environment
-  variable is invisible in the code under measurement.
+  variable is invisible in the code under measurement;
+- the package, ``scripts/`` or a top-level module names
+  ``spark.python.daemon.module`` (the benchmark finds the Python workers'
+  CPU under their ``pyspark.daemon`` parent), or sets
+  ``spark.python.worker.module`` to anything but a literal name that starts
+  with ``pyspark`` and is a module beside the package (``pyspark.daemon``
+  silently runs ``pyspark.worker`` for any other name), or ``session.py``
+  stops setting it.
 """
 
 from __future__ import annotations
@@ -31,6 +38,8 @@ REPO = os.path.dirname(PKG_DIR)
 HARNESS = os.path.join("scripts", "measure.py")
 #: the package's deployment knobs: session sizing and the barrier mode
 ENV_READERS = {"session.py", os.path.join("operators", "barrier.py")}
+DAEMON_KEY = "spark.python.daemon.module"
+WORKER_KEY = "spark.python.worker.module"
 PROTOCOL_KINDS = {"noop sink", "git rev-parse", "os.getloadavg", "plan text",
                   "sha256 calibration loop"}
 CODE_IN_STRINGS = {
@@ -126,3 +135,72 @@ def test_env_knobs_only_in_session_and_barrier():
                 offenders += [f"{rel}:{n}" for n in lines]
     assert not offenders, "SPARK_GRAFT_* read outside session/barrier:\n" + "\n".join(offenders)
     assert readers == ENV_READERS, f"the knob readers moved: found {readers}"
+
+
+def _worker_conf_values(tree) -> list:
+    """Value nodes given to ``WORKER_KEY`` in a dict display or a
+    ``config(key, value)``-style call."""
+    values = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Dict):
+            values += [v for k, v in zip(node.keys, node.values)
+                       if isinstance(k, ast.Constant) and k.value == WORKER_KEY]
+        elif isinstance(node, ast.Call) and len(node.args) >= 2 and isinstance(
+                node.args[0], ast.Constant) and node.args[0].value == WORKER_KEY:
+            values.append(node.args[1])
+    return values
+
+
+def _worker_conf_violations(repo: str) -> list[str]:
+    """Breaches of the Python-worker launch rules under checkout ``repo``."""
+    pkg = os.path.join(repo, os.path.basename(PKG_DIR))
+    files = sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+                   + glob.glob(os.path.join(repo, "scripts", "*.py"))
+                   + glob.glob(os.path.join(repo, "*.py")))
+    out, set_in_session = [], False
+    for path in files:
+        rel = os.path.relpath(path, repo)
+        tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
+        out += [f"{rel}:{n.lineno}: names {DAEMON_KEY}" for n in ast.walk(tree)
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+                and DAEMON_KEY in n.value]
+        for v in _worker_conf_values(tree):
+            name = v.value if isinstance(v, ast.Constant) else None
+            if not (isinstance(name, str) and name.startswith("pyspark")
+                    and os.path.isfile(os.path.join(repo, name + ".py"))):
+                out.append(f"{rel}:{v.lineno}: {WORKER_KEY} is not a pyspark* module "
+                           f"beside the package: {ast.unparse(v)}")
+            set_in_session |= rel == os.path.join(os.path.basename(PKG_DIR), "session.py")
+    if not set_in_session:
+        out.append(f"session.py does not set {WORKER_KEY}")
+    return out
+
+
+def test_python_worker_launch_conf():
+    assert _worker_conf_violations(REPO) == []
+
+
+def test_python_worker_lint_catches_each_rule(tmp_path):
+    """The lint on copies of this checkout that each break one rule."""
+    pkg = os.path.basename(PKG_DIR)
+
+    def copy(session_src: str, script_src: str = "") -> str:
+        root = tmp_path / f"c{len(list(tmp_path.iterdir()))}"
+        (root / pkg).mkdir(parents=True)
+        (root / "scripts").mkdir()
+        (root / pkg / "session.py").write_text(session_src)
+        (root / "scripts" / "probe.py").write_text(script_src)
+        (root / "pyspark_ecol_worker.py").write_text("")
+        return str(root)
+
+    good = open(os.path.join(PKG_DIR, "session.py"), encoding="utf-8").read()
+    assert _worker_conf_violations(copy(good)) == []
+    broken = {
+        "daemon module": copy(good, f'CONF = {{"{DAEMON_KEY}": "pyspark_ecol_daemon"}}\n'),
+        "non-pyspark name": copy(good.replace('"pyspark_ecol_worker"', '"ecol_worker"')),
+        "missing module": copy(good.replace('"pyspark_ecol_worker"', '"pyspark_ecol_wrker"')),
+        "not set": copy(good.replace(WORKER_KEY, "spark.python.worker.reuse")),
+        "set elsewhere": copy(good, f'spark.conf.set("{WORKER_KEY}", "ecol_worker")\n'),
+    }
+    for rule, root in broken.items():
+        assert _worker_conf_violations(root), f"lint missed: {rule}"
