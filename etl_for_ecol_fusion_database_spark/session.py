@@ -15,7 +15,11 @@ safe to call on a session we did not create (the driver owns the session in
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
 
 from pyspark.sql import SparkSession
 
@@ -65,6 +69,13 @@ WORKER_CONF: dict[str, str] = {
 #: the directory holding the package and the worker module
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+#: seconds the interpreter waits at exit for the JVM it launched: a JVM
+#: writing a class-data-sharing archive takes ~12-15 s on 4 vCPUs
+JVM_EXIT_WAIT_S = {"dump": 180.0, "plain": 30.0}
+
+# the archive state of the driver JVM get_spark launched in this process
+_jvm_archive: dict | None = None
+
 
 def pin_parity_conf(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable parity conf to an existing session."""
@@ -75,6 +86,149 @@ def pin_parity_conf(spark: SparkSession) -> SparkSession:
             # non-runtime-settable on this build: leave session default
             pass
     return spark
+
+
+def archive_dir() -> str:
+    """The per-user cache of driver-JVM class-data-sharing archives."""
+    base = os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache")
+    return os.path.join(base, "etl_for_ecol_fusion_database_spark", "jvm-cds")
+
+
+def jvm_archive() -> dict | None:
+    """How the driver JVM that :func:`get_spark` launched in this process
+    uses its class-data-sharing archive: ``{"state", "path", "bytes",
+    "key"}`` with ``state`` one of ``used`` (handed to the JVM, which
+    ignores it with a warning on stderr if it does not match), ``created``
+    (dumped at JVM exit, published at interpreter exit) or
+    ``skipped:<reason>``; None if it launched none."""
+    return dict(_jvm_archive) if _jvm_archive else None
+
+
+def _cds_log(mode: str) -> list[str]:
+    """CDS log lines go to stderr, never to stdout (the JVM's default); a
+    dump logs ~650 skipped-class warnings, so it keeps only errors."""
+    return ["-Xlog:cds*=off", f"-Xlog:cds*={'error' if mode == 'dump' else 'warning'}:stderr"]
+
+
+def _stat_line(path: str) -> str:
+    st = os.stat(path)
+    return f"{path} {st.st_size} {st.st_mtime_ns}\n"
+
+
+def _plan_archive() -> tuple[dict, list[str], str | None]:
+    """(state, driver JVM options, conf dir to launch with) for a JVM about
+    to launch.  The archive holds JDK and Spark classes only, so its key
+    is the ``java`` binary, ``libjvm`` and the Spark jar listing."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    state = {"state": None, "path": None, "bytes": None, "key": None}
+
+    def skip(reason: str) -> tuple[dict, list[str], None]:
+        return {**state, "state": f"skipped:{reason}"}, [], None
+
+    home = _find_spark_home()
+    # CDS refuses a non-empty directory on the classpath, and the launcher
+    # puts the conf directory first: an empty one stands in for it only
+    # when it holds nothing but templates
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(home, "conf")
+    if os.path.isdir(conf) and any(not f.endswith(".template") for f in os.listdir(conf)):
+        return skip("conf-dir")
+    if any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")):
+        return skip("extra-classpath")
+    java = (os.path.join(os.environ["JAVA_HOME"], "bin", "java") if os.environ.get("JAVA_HOME")
+            else shutil.which("java"))
+    java = os.path.realpath(java) if java else ""
+    libjvm = os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "server", "libjvm.so")
+    jars = os.path.join(home, "jars")
+    try:
+        state["key"] = hashlib.sha256("".join(
+            [_stat_line(java), _stat_line(libjvm)]
+            + [_stat_line(os.path.join(jars, f)) for f in sorted(os.listdir(jars))]
+        ).encode()).hexdigest()[:16]
+    except OSError:
+        return skip("no-java-or-jars")
+    root = archive_dir()
+    jsa = state["path"] = os.path.join(root, f"{state['key']}.jsa")
+    empty = os.path.join(root, "empty-conf")
+    try:
+        os.makedirs(empty, exist_ok=True)
+    except OSError:
+        return skip("cache-unwritable")
+    if os.listdir(empty):
+        return skip("conf-dir")
+    if os.path.isfile(jsa):
+        size = os.path.getsize(jsa)
+        if _sidecar_size(jsa) != size:
+            return skip("size-mismatch")
+        return ({**state, "state": "used", "bytes": size},
+                [f"-XX:SharedArchiveFile={jsa}", *_cds_log("use")], empty)
+    # each key is dumped once: this claim stays behind if the dump fails
+    try:
+        fd = os.open(f"{jsa}.tried", os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
+        return skip("dump-tried")
+    except OSError:
+        return skip("cache-unwritable")
+    os.write(fd, str(os.getpid()).encode())
+    os.close(fd)
+    return ({**state, "state": "created"},
+            [f"-XX:ArchiveClassesAtExit={jsa}.tmp-{os.getpid()}", *_cds_log("dump")], empty)
+
+
+def _sidecar_size(jsa: str) -> int | None:
+    """The archive size recorded when ``jsa`` was published."""
+    try:
+        with open(f"{jsa}.size") as fh:
+            return int(fh.read())
+    except (OSError, ValueError):
+        return None
+
+
+def _await_jvm(proc: subprocess.Popen, state: dict) -> None:
+    """At interpreter exit: stop a context still running on the JVM this
+    process launched, end the JVM (EOF on its stdin), wait for it with a
+    bound (kill it past the bound) and, if it was dumping an archive and
+    exited with 0, publish the archive: the size sidecar first, then the
+    archive by ``os.replace``, so a reader never maps a partial file.  A
+    failed dump leaves its claim behind."""
+    from pyspark import SparkContext
+
+    dumping = state["state"] == "created"
+    sc = SparkContext._active_spark_context
+    if sc is not None and proc.poll() is None and getattr(sc._gateway, "proc", None) is proc:
+        # a context left running would see its JVM vanish: the accumulator
+        # server thread prints an EOFError traceback
+        try:
+            sc.stop()
+        except Exception:
+            pass
+    try:
+        proc.stdin.close()
+    except (OSError, AttributeError):
+        pass
+    try:
+        rc = proc.wait(timeout=JVM_EXIT_WAIT_S["dump" if dumping else "plain"])
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        rc = proc.wait()
+    if not dumping:
+        return
+    jsa = state["path"]
+    tmp = f"{jsa}.tmp-{os.getpid()}"
+    try:
+        if rc == 0 and os.path.getsize(tmp) > 0:
+            with open(f"{tmp}.size", "w") as fh:
+                fh.write(str(os.path.getsize(tmp)))
+            os.replace(f"{tmp}.size", f"{jsa}.size")
+            os.replace(tmp, jsa)
+            os.remove(f"{jsa}.tried")
+    except OSError:
+        pass
+    for leftover in (tmp, f"{tmp}.size"):
+        try:
+            os.remove(leftover)
+        except OSError:
+            pass
 
 
 def get_spark(
@@ -91,7 +245,17 @@ def get_spark(
     (ahead of any ``spark.executorEnv.PYTHONPATH`` in ``extra_conf``), so
     they import this package and the worker module from any working
     directory.
+
+    When this call launches the driver JVM, the JVM maps a class-data-
+    sharing archive of the JDK and Spark classes from :func:`archive_dir`
+    (``-XX:SharedArchiveFile``, merged into any
+    ``spark.driver.extraJavaOptions`` in ``extra_conf``), or dumps one at
+    exit when none is published yet; :func:`jvm_archive` reports which.
+    Either way the interpreter waits at exit for the JVM to end.
     """
+    global _jvm_archive
+    from pyspark import SparkContext
+
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -108,7 +272,28 @@ def get_spark(
     conf = dict(extra_conf or {})
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
+    launching = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
+    state, opts, conf_dir = _plan_archive() if launching else (None, [], None)
+    if opts:
+        conf["spark.driver.extraJavaOptions"] = " ".join(
+            o for o in (conf.get("spark.driver.extraJavaOptions"), *opts) if o)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # the launcher reads SPARK_CONF_DIR from the environment of this launch
+    saved = os.environ.get("SPARK_CONF_DIR")
+    if conf_dir:
+        os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if conf_dir and saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        elif conf_dir:
+            os.environ["SPARK_CONF_DIR"] = saved
+    if launching:
+        _jvm_archive = state
+        # the gateway's Popen, held here: callers may drop SparkContext._gateway
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if proc is not None:
+            atexit.register(_await_jvm, proc, state)
     return pin_parity_conf(spark)

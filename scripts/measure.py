@@ -138,13 +138,18 @@ def host() -> dict:
 
 def provenance(repo: str = REPO, exclude: tuple[str, ...] = ()) -> dict:
     """HEAD, dirty flag and dirty paths of ``repo`` (``exclude`` paths, an
-    instrument's own output, never count as dirt), plus every
-    ``SPARK_GRAFT_*`` variable set in this process: a non-default knob is
-    recorded in the artifact it affected."""
+    instrument's own output, never count as dirt), every ``SPARK_GRAFT_*``
+    variable set in this process (a non-default knob is recorded in the
+    artifact it affected), and the class-data-sharing archive state of the
+    driver JVM this process launched (``session.jvm_archive()``: state,
+    path, bytes, key; None without a session, or with a package that
+    predates the archive)."""
+    session_mod = sys.modules.get("etl_for_ecol_fusion_database_spark.session")
     out = {
         "git_head": None, "git_dirty": None, "git_dirty_paths": [],
         "knobs": {k: v for k, v in sorted(os.environ.items())
                   if k.startswith("SPARK_GRAFT_")},
+        "jvm_archive": getattr(session_mod, "jvm_archive", lambda: None)(),
     }
     try:
         out["git_head"] = subprocess.run(

@@ -21,7 +21,13 @@ lives once in ``scripts/measure.py``.  This lint fails if
   ``spark.python.worker.module`` to anything but a literal name that starts
   with ``pyspark`` and is a module beside the package (``pyspark.daemon``
   silently runs ``pyspark.worker`` for any other name), or ``session.py``
-  stops setting it.
+  stops setting it;
+- a module other than ``session.py`` in the package, ``scripts/`` or the
+  top level names ``SharedArchiveFile``, ``ArchiveClassesAtExit`` or
+  ``SPARK_CONF_DIR``: the driver JVM's class-data-sharing archive is
+  published, checked and handed to the JVM in one place, and an archive
+  handed over elsewhere skips the size check that keeps a truncated one
+  from crashing the JVM.
 """
 
 from __future__ import annotations
@@ -39,6 +45,10 @@ HARNESS = os.path.join("scripts", "measure.py")
 #: the package's deployment knobs: session sizing and the barrier mode
 ENV_READERS = {"session.py", os.path.join("operators", "barrier.py")}
 DAEMON_KEY = "spark.python.daemon.module"
+SESSION = os.path.join(os.path.basename(PKG_DIR), "session.py")
+#: names only session.py may use: the JVM's CDS flags and the launcher's
+#: conf directory
+ARCHIVE_NAMES = ("SharedArchiveFile", "ArchiveClassesAtExit", "SPARK_CONF_DIR")
 WORKER_KEY = "spark.python.worker.module"
 PROTOCOL_KINDS = {"noop sink", "git rev-parse", "os.getloadavg", "plan text",
                   "sha256 calibration loop"}
@@ -151,14 +161,18 @@ def _worker_conf_values(tree) -> list:
     return values
 
 
+def _checkout_files(repo: str) -> list[str]:
+    """The package, ``scripts/`` and top-level modules of checkout ``repo``."""
+    pkg = os.path.join(repo, os.path.basename(PKG_DIR))
+    return sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+                  + glob.glob(os.path.join(repo, "scripts", "*.py"))
+                  + glob.glob(os.path.join(repo, "*.py")))
+
+
 def _worker_conf_violations(repo: str) -> list[str]:
     """Breaches of the Python-worker launch rules under checkout ``repo``."""
-    pkg = os.path.join(repo, os.path.basename(PKG_DIR))
-    files = sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
-                   + glob.glob(os.path.join(repo, "scripts", "*.py"))
-                   + glob.glob(os.path.join(repo, "*.py")))
     out, set_in_session = [], False
-    for path in files:
+    for path in _checkout_files(repo):
         rel = os.path.relpath(path, repo)
         tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
         out += [f"{rel}:{n.lineno}: names {DAEMON_KEY}" for n in ast.walk(tree)
@@ -170,7 +184,7 @@ def _worker_conf_violations(repo: str) -> list[str]:
                     and os.path.isfile(os.path.join(repo, name + ".py"))):
                 out.append(f"{rel}:{v.lineno}: {WORKER_KEY} is not a pyspark* module "
                            f"beside the package: {ast.unparse(v)}")
-            set_in_session |= rel == os.path.join(os.path.basename(PKG_DIR), "session.py")
+            set_in_session |= rel == SESSION
     if not set_in_session:
         out.append(f"session.py does not set {WORKER_KEY}")
     return out
@@ -204,3 +218,57 @@ def test_python_worker_lint_catches_each_rule(tmp_path):
     }
     for rule, root in broken.items():
         assert _worker_conf_violations(root), f"lint missed: {rule}"
+
+
+def _archive_name_violations(repo: str) -> list[str]:
+    """Strings naming a CDS flag or ``SPARK_CONF_DIR`` outside
+    ``session.py`` under checkout ``repo``, and names ``session.py`` lacks."""
+    out, in_session = [], set()
+    for path in _checkout_files(repo):
+        rel = os.path.relpath(path, repo)
+        tree = ast.parse(open(path, encoding="utf-8").read(), filename=path)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            for name in ARCHIVE_NAMES:
+                if name not in node.value:
+                    continue
+                if rel == SESSION:
+                    in_session.add(name)
+                else:
+                    out.append(f"{rel}:{node.lineno}: names {name}")
+    out += [f"{SESSION} does not name {n}" for n in ARCHIVE_NAMES if n not in in_session]
+    return out
+
+
+def test_jvm_archive_names_only_in_session():
+    assert _archive_name_violations(REPO) == []
+
+
+def test_jvm_archive_lint_catches_each_rule(tmp_path):
+    """The lint on copies of this checkout that each break one rule."""
+    pkg = os.path.basename(PKG_DIR)
+    good = open(os.path.join(PKG_DIR, "session.py"), encoding="utf-8").read()
+
+    def copy(session_src: str, rel: str = "", src: str = "") -> str:
+        root = tmp_path / f"c{len(list(tmp_path.iterdir()))}"
+        for d in (pkg, "scripts"):
+            (root / d).mkdir(parents=True)
+        (root / pkg / "session.py").write_text(session_src)
+        if rel:
+            (root / rel).write_text(src)
+        return str(root)
+
+    assert _archive_name_violations(copy(good)) == []
+    broken = {
+        "flag in a script": copy(
+            good, "scripts/probe.py",
+            'CONF = {"spark.driver.extraJavaOptions": "-XX:SharedArchiveFile=/x.jsa"}\n'),
+        "dump in the package": copy(
+            good, f"{pkg}/catalog.py", 'OPTS = f"-XX:ArchiveClassesAtExit={path}"\n'),
+        "conf dir at the top level": copy(
+            good, "bench.py", 'import os\nos.environ["SPARK_CONF_DIR"] = "/tmp/c"\n'),
+        "moved out of session": copy(good.replace("ArchiveClassesAtExit", "ArchiveAtExit")),
+    }
+    for rule, root in broken.items():
+        assert _archive_name_violations(root), f"lint missed: {rule}"
