@@ -20,6 +20,8 @@ import hashlib
 import os
 import shutil
 import subprocess
+import threading
+import time
 
 from pyspark.sql import SparkSession
 
@@ -69,9 +71,13 @@ WORKER_CONF: dict[str, str] = {
 #: the directory holding the package and the worker module
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-#: seconds the interpreter waits at exit for the JVM it launched: a JVM
-#: writing a class-data-sharing archive takes ~12-15 s on 4 vCPUs
-JVM_EXIT_WAIT_S = {"dump": 180.0, "plain": 30.0}
+#: seconds the interpreter waits at exit for the JVM it launched to stop its
+#: context and end; a JVM still running past it is left to end on the EOF
+#: of its stdin, and no archive is dumped
+JVM_EXIT_WAIT_S = 30.0
+#: seconds the creating interpreter gives ``java -Xshare:dump`` at exit
+#: (~30 s on 4 vCPUs) before it kills the dump and publishes nothing
+DUMP_WAIT_S = 180.0
 
 # the archive state of the driver JVM get_spark launched in this process
 _jvm_archive: dict | None = None
@@ -97,22 +103,36 @@ def archive_dir() -> str:
 def jvm_archive() -> dict | None:
     """How the driver JVM that :func:`get_spark` launched in this process
     uses its class-data-sharing archive: ``{"state", "path", "bytes",
-    "key"}`` with ``state`` one of ``used`` (handed to the JVM, which
-    ignores it with a warning on stderr if it does not match), ``created``
-    (dumped at JVM exit, published at interpreter exit) or
-    ``skipped:<reason>``; None if it launched none."""
+    "key"}`` with ``state`` one of ``used`` (the JVM mapped it),
+    ``rejected`` (handed to the JVM, which refused it and runs without
+    class-data sharing), ``created`` (this JVM
+    records its class list; the archive is dumped from it and published at
+    interpreter exit) or ``skipped:<reason>``; None if it launched none."""
     return dict(_jvm_archive) if _jvm_archive else None
 
 
-def _cds_log(mode: str) -> list[str]:
-    """CDS log lines go to stderr, never to stdout (the JVM's default); a
-    dump logs ~650 skipped-class warnings, so it keeps only errors."""
-    return ["-Xlog:cds*=off", f"-Xlog:cds*={'error' if mode == 'dump' else 'warning'}:stderr"]
+#: CDS log lines go to stderr, never to stdout (the JVM's default)
+_CDS_LOG = ["-Xlog:cds*=off", "-Xlog:cds*=warning:stderr"]
 
 
 def _stat_line(path: str) -> str:
     st = os.stat(path)
     return f"{path} {st.st_size} {st.st_mtime_ns}\n"
+
+
+def _alive(pid: int) -> bool:
+    """Whether process ``pid`` runs (a zombie does not)."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            return fh.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except (OSError, IndexError):
+        return True
 
 
 def _plan_archive() -> tuple[dict, list[str], str | None]:
@@ -141,8 +161,11 @@ def _plan_archive() -> tuple[dict, list[str], str | None]:
     libjvm = os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "server", "libjvm.so")
     jars = os.path.join(home, "jars")
     try:
+        # the format tag keeps a dynamic archive of the same JDK and Spark
+        # (which maps over the JDK's own, so the JVM reports sharing even
+        # when it refuses it) from being taken for a static one
         state["key"] = hashlib.sha256("".join(
-            [_stat_line(java), _stat_line(libjvm)]
+            ["static\n", _stat_line(java), _stat_line(libjvm)]
             + [_stat_line(os.path.join(jars, f)) for f in sorted(os.listdir(jars))]
         ).encode()).hexdigest()[:16]
     except OSError:
@@ -161,18 +184,40 @@ def _plan_archive() -> tuple[dict, list[str], str | None]:
         if _sidecar_size(jsa) != size:
             return skip("size-mismatch")
         return ({**state, "state": "used", "bytes": size},
-                [f"-XX:SharedArchiveFile={jsa}", *_cds_log("use")], empty)
-    # each key is dumped once: this claim stays behind if the dump fails
+                [f"-XX:SharedArchiveFile={jsa}", *_CDS_LOG], empty)
+    # each key is dumped once: this claim, holding the claimant's pid,
+    # stays behind if the dump fails
     try:
         fd = os.open(f"{jsa}.tried", os.O_CREAT | os.O_EXCL | os.O_WRONLY)
     except FileExistsError:
+        _remove_orphans(jsa)
         return skip("dump-tried")
     except OSError:
         return skip("cache-unwritable")
     os.write(fd, str(os.getpid()).encode())
     os.close(fd)
     return ({**state, "state": "created"},
-            [f"-XX:ArchiveClassesAtExit={jsa}.tmp-{os.getpid()}", *_cds_log("dump")], empty)
+            [f"-XX:DumpLoadedClassList={jsa}.classlist-{os.getpid()}", *_CDS_LOG], empty)
+
+
+def _remove_orphans(jsa: str) -> None:
+    """Delete the class list and partial archive of a claimant that died
+    without its exit hook (SIGTERM, SIGKILL, ``os._exit``)."""
+    try:
+        with open(f"{jsa}.tried") as fh:
+            pid = int(fh.read())
+    except (OSError, ValueError):
+        return
+    if pid != os.getpid() and not _alive(pid):
+        _remove(f"{jsa}.classlist-{pid}", f"{jsa}.tmp-{pid}", f"{jsa}.tmp-{pid}.size")
+
+
+def _remove(*paths: str) -> None:
+    for path in paths:
+        try:
+            os.remove(path)
+        except OSError:
+            pass
 
 
 def _sidecar_size(jsa: str) -> int | None:
@@ -184,38 +229,59 @@ def _sidecar_size(jsa: str) -> int | None:
         return None
 
 
-def _await_jvm(proc: subprocess.Popen, state: dict) -> None:
+def _await_jvm(proc: subprocess.Popen, state: dict, dump: list[str] | None) -> None:
     """At interpreter exit: stop a context still running on the JVM this
-    process launched, end the JVM (EOF on its stdin), wait for it with a
-    bound (kill it past the bound) and, if it was dumping an archive and
-    exited with 0, publish the archive: the size sidecar first, then the
-    archive by ``os.replace``, so a reader never maps a partial file.  A
-    failed dump leaves its claim behind."""
+    process launched, end the JVM (EOF on its stdin) and wait for it, all
+    within :data:`JVM_EXIT_WAIT_S`.  A JVM still running then is left to
+    end on its own, as it would without this hook.  If the JVM recorded
+    its class list and exited with 0, dump the archive (``dump``: the
+    ``java -Xshare:dump`` command) and publish it."""
     from pyspark import SparkContext
 
-    dumping = state["state"] == "created"
+    deadline = time.monotonic() + JVM_EXIT_WAIT_S
     sc = SparkContext._active_spark_context
     if sc is not None and proc.poll() is None and getattr(sc._gateway, "proc", None) is proc:
         # a context left running would see its JVM vanish: the accumulator
-        # server thread prints an EOFError traceback
-        try:
-            sc.stop()
-        except Exception:
-            pass
+        # server thread prints an EOFError traceback.  sc.stop() talks to
+        # the JVM without a timeout, so it runs on a thread held to the
+        # deadline
+        stopper = threading.Thread(target=_stop_quietly, args=(sc,), daemon=True)
+        stopper.start()
+        stopper.join(max(0.0, deadline - time.monotonic()))
     try:
         proc.stdin.close()
     except (OSError, AttributeError):
         pass
     try:
-        rc = proc.wait(timeout=JVM_EXIT_WAIT_S["dump" if dumping else "plain"])
+        rc = proc.wait(timeout=max(0.0, deadline - time.monotonic()))
     except subprocess.TimeoutExpired:
-        proc.kill()
-        rc = proc.wait()
-    if not dumping:
         return
-    jsa = state["path"]
+    if dump is not None:
+        if rc == 0:
+            _dump_archive(state["path"], dump)
+        _remove(f"{state['path']}.classlist-{os.getpid()}")
+
+
+def _stop_quietly(sc) -> None:
+    try:
+        sc.stop()
+    except Exception:
+        pass
+
+
+def _dump_archive(jsa: str, dump: list[str]) -> None:
+    """Run ``dump`` with a bound and, after exit code 0, publish the
+    archive it wrote: the size sidecar first, then the archive by
+    ``os.replace``, so a reader never maps a partial file.  A failed dump
+    leaves its claim behind."""
     tmp = f"{jsa}.tmp-{os.getpid()}"
     try:
+        proc = subprocess.Popen(dump, stdin=subprocess.DEVNULL, stdout=subprocess.DEVNULL)
+        try:
+            rc = proc.wait(timeout=DUMP_WAIT_S)
+        except subprocess.TimeoutExpired:
+            proc.kill()
+            rc = proc.wait()
         if rc == 0 and os.path.getsize(tmp) > 0:
             with open(f"{tmp}.size", "w") as fh:
                 fh.write(str(os.path.getsize(tmp)))
@@ -224,11 +290,21 @@ def _await_jvm(proc: subprocess.Popen, state: dict) -> None:
             os.remove(f"{jsa}.tried")
     except OSError:
         pass
-    for leftover in (tmp, f"{tmp}.size"):
-        try:
-            os.remove(leftover)
-        except OSError:
-            pass
+    _remove(tmp, f"{tmp}.size")
+
+
+def _dump_command(jvm, jsa: str) -> list[str]:
+    """The static dump of the class list the running JVM records: the
+    same ``java``, classpath, heap size and added modules, so the archive
+    matches the JVMs that later map it."""
+    runtime = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    flags = [a for a in runtime.getInputArguments()
+             if a.startswith(("-Xmx", "--add-modules"))]
+    return [os.path.join(jvm.System.getProperty("java.home"), "bin", "java"),
+            "-Xshare:dump", f"-XX:SharedClassListFile={jsa}.classlist-{os.getpid()}",
+            f"-XX:SharedArchiveFile={jsa}.tmp-{os.getpid()}", *flags,
+            "-Xlog:cds*=off", "-Xlog:cds*=error:stderr",
+            "-cp", jvm.System.getProperty("java.class.path")]
 
 
 def get_spark(
@@ -249,9 +325,11 @@ def get_spark(
     When this call launches the driver JVM, the JVM maps a class-data-
     sharing archive of the JDK and Spark classes from :func:`archive_dir`
     (``-XX:SharedArchiveFile``, merged into any
-    ``spark.driver.extraJavaOptions`` in ``extra_conf``), or dumps one at
-    exit when none is published yet; :func:`jvm_archive` reports which.
-    Either way the interpreter waits at exit for the JVM to end.
+    ``spark.driver.extraJavaOptions`` in ``extra_conf``).  When none is
+    published yet, the JVM records the classes it loads and the
+    interpreter dumps the archive from that list at exit;
+    :func:`jvm_archive` reports which.  Either way the interpreter waits
+    at exit, with a bound, for the JVM to end.
     """
     global _jvm_archive
     from pyspark import SparkContext
@@ -291,9 +369,15 @@ def get_spark(
         elif conf_dir:
             os.environ["SPARK_CONF_DIR"] = saved
     if launching:
+        jvm = SparkContext._jvm
+        dump = None
+        if state["state"] == "used" and "sharing" not in jvm.System.getProperty("java.vm.info"):
+            state["state"] = "rejected"
+        elif state["state"] == "created":
+            dump = _dump_command(jvm, state["path"])
         _jvm_archive = state
         # the gateway's Popen, held here: callers may drop SparkContext._gateway
         proc = getattr(SparkContext._gateway, "proc", None)
         if proc is not None:
-            atexit.register(_await_jvm, proc, state)
+            atexit.register(_await_jvm, proc, state, dump)
     return pin_parity_conf(spark)

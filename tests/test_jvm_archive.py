@@ -5,11 +5,15 @@ Every case runs ``get_spark`` in a child interpreter with its own
 directory.  In each, the session starts, a query returns its known rows,
 and no CDS log line reaches the child's stdout.
 
-- Publication: a session with an empty cache dumps the archive at JVM
-  exit and publishes exactly one ``<key>.jsa`` plus its size sidecar
-  before its interpreter returns (so no JVM outlives it); the next session
-  maps it.  A session whose JVM is killed during the dump publishes
-  nothing, and the next session does not dump that key again.
+- Publication: a session with an empty cache records its JVM's class
+  list, dumps the archive from it at interpreter exit and publishes
+  exactly one ``<key>.jsa`` plus its size sidecar before its interpreter
+  returns (so no JVM outlives it); the next session maps it.  A session
+  whose dump is killed while it writes publishes nothing, and the next
+  session does not dump that key again.  A claimant that dies without its
+  exit hook leaves files the next session removes.
+- Exit: a session whose JVM is stopped (SIGSTOP) still lets its
+  interpreter return within the exit bound.
 - Fallbacks: a truncated archive whose size differs from the sidecar, an
   archive built for another classpath, a cache that cannot be written,
   and a conf directory holding a real ``spark-defaults.conf`` (whose
@@ -22,7 +26,10 @@ import json
 import os
 import shutil
 import subprocess
+import signal
 import sys
+import tempfile
+import time
 from collections import Counter
 
 import pytest
@@ -34,44 +41,63 @@ REPO = session_mod.PACKAGE_ROOT
 EXPECTED = sorted(Counter(i % 7 for i in range(1000)).items())
 
 CHILD = r"""
-import json, os, sys, time
+import atexit, json, os, signal, subprocess, sys, threading, time
 sys.path.insert(0, {repo!r})
 from etl_for_ecol_fusion_database_spark import session
+t_start = []
+# registered first, so it runs after the session's exit hook
+atexit.register(lambda: t_start and print("EXIT_HOOKS_S", time.monotonic() - t_start[0], flush=True))
 spark = session.get_spark("jvm-archive", master="local[1]", shuffle_partitions=1)
 sc = spark.sparkContext
 rows = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().orderBy("k").collect()
 print("RESULT " + json.dumps({{
     "archive": session.jvm_archive(),
     "rows": [list(r) for r in rows],
+    "pid": os.getpid(),
     "jvm_pid": sc._gateway.proc.pid,
     "java_options": sc.getConf().get("spark.driver.extraJavaOptions") or "",
     "marker": spark.conf.get("spark.ecol.test.marker", None),
 }}), flush=True)
-if {kill_dump!r}:
-    # end the JVM, then kill it once it has written part of its dump
-    proc = sc._gateway.proc
-    tmp = session.jvm_archive()["path"] + f".tmp-{{os.getpid()}}"
-    spark.stop()
-    proc.stdin.close()
-    deadline = time.time() + 240
-    while proc.poll() is None and time.time() < deadline and not (
-            os.path.exists(tmp) and os.path.getsize(tmp) > 0):
-        time.sleep(0.002)
-    proc.kill()
-    proc.wait()
-    print("KILLED_AT", os.path.getsize(tmp) if os.path.exists(tmp) else 0, proc.returncode)
+mode = {mode!r}
+if mode == "kill_dump":
+    # kill the dump once it has written part of the archive
+    popen = subprocess.Popen
+    def killing_popen(cmd, *args, **kwargs):
+        proc = popen(cmd, *args, **kwargs)
+        tmp = session.jvm_archive()["path"] + f".tmp-{{os.getpid()}}"
+        def kill():
+            deadline = time.time() + 240
+            while proc.poll() is None and time.time() < deadline and not (
+                    os.path.exists(tmp) and os.path.getsize(tmp) > 0):
+                time.sleep(0.002)
+            size = os.path.getsize(tmp) if os.path.exists(tmp) else 0
+            proc.kill()
+            print("KILLED_AT", size, proc.wait(), flush=True)
+        threading.Thread(target=kill).start()
+        return proc
+    subprocess.Popen = killing_popen
+elif mode == "stop_jvm":
+    session.JVM_EXIT_WAIT_S = 5.0
+    os.kill(sc._gateway.proc.pid, signal.SIGSTOP)
+    t_start.append(time.monotonic())
+elif mode == "sigterm":
+    os.kill(os.getpid(), signal.SIGTERM)
 """
 
 
-def _child(cache: str, *, kill_dump: bool = False, **env):
+def _child(cache: str, *, mode: str = "", returncode: int = 0, **env):
     """Run one session in a child; return its report and the finished
     process."""
     full = dict(os.environ, XDG_CACHE_HOME=cache, SPARK_GRAFT_CPUS="1",
                 SPARK_GRAFT_DRIVER_MEM="1g", **env)
-    out = subprocess.run(
-        [sys.executable, "-c", CHILD.format(repo=REPO, kill_dump=kill_dump)],
-        capture_output=True, text=True, timeout=600, env=full, cwd=REPO)
-    assert out.returncode == 0, out.stderr[-3000:]
+    # files, not pipes: a JVM left running holds its copy of them open
+    with tempfile.TemporaryFile("w+") as fo, tempfile.TemporaryFile("w+") as fe:
+        rc = subprocess.run([sys.executable, "-c", CHILD.format(repo=REPO, mode=mode)],
+                            stdout=fo, stderr=fe, timeout=600, env=full, cwd=REPO).returncode
+        fo.seek(0)
+        fe.seek(0)
+        out = subprocess.CompletedProcess([], rc, fo.read(), fe.read())
+    assert out.returncode == returncode, out.stderr[-3000:]
     assert "[cds" not in out.stdout, out.stdout[-3000:]
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("RESULT ")]
     assert len(lines) == 1, out.stdout[-3000:]
@@ -80,21 +106,24 @@ def _child(cache: str, *, kill_dump: bool = False, **env):
     return report, out
 
 
-def _cache_files(cache: str) -> list[str]:
+def _cache_files(cache: str) -> set[str]:
     root = os.path.join(cache, "etl_for_ecol_fusion_database_spark", "jvm-cds")
-    return sorted(os.listdir(root)) if os.path.isdir(root) else []
+    return set(os.listdir(root)) if os.path.isdir(root) else set()
 
 
 def _no_archive(java_options: str) -> bool:
-    return "SharedArchiveFile" not in java_options and "ArchiveClassesAtExit" not in java_options
+    return "SharedArchiveFile" not in java_options and "DumpLoadedClassList" not in java_options
 
 
 def _alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    return True
+    return session_mod._alive(pid)
+
+
+def _await_exit(pid: int, timeout: float = 60.0) -> None:
+    deadline = time.monotonic() + timeout
+    while _alive(pid) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not _alive(pid), f"process {pid} still runs"
 
 
 @pytest.fixture(scope="module")
@@ -109,9 +138,9 @@ def test_creating_session_publishes_one_archive_before_it_returns(published):
     cache, report = published
     arch = report["archive"]
     assert arch["state"] == "created" and arch["bytes"] is None
-    assert "-XX:ArchiveClassesAtExit=" in report["java_options"]
+    assert "-XX:DumpLoadedClassList=" in report["java_options"]
     key = arch["key"]
-    assert _cache_files(cache) == ["empty-conf", f"{key}.jsa", f"{key}.jsa.size"]
+    assert _cache_files(cache) == {"empty-conf", f"{key}.jsa", f"{key}.jsa.size"}
     size = os.path.getsize(arch["path"])
     assert size > 1 << 20
     with open(arch["path"] + ".size") as fh:
@@ -133,17 +162,45 @@ def test_published_archive_is_used(published):
 
 def test_killed_dump_publishes_nothing_and_is_not_retried(tmp_path):
     cache = str(tmp_path)
-    report, out = _child(cache, kill_dump=True)
+    report, out = _child(cache, mode="kill_dump")
     key = report["archive"]["key"]
     assert report["archive"]["state"] == "created"
     # killed by SIGKILL with part of the archive written
-    killed_at, rc = out.stdout.split("KILLED_AT")[1].split()
+    killed_at, rc = out.stdout.split("KILLED_AT")[1].split()[:2]
     assert int(killed_at) > 0 and int(rc) == -9
-    assert _cache_files(cache) == ["empty-conf", f"{key}.jsa.tried"]
+    assert _cache_files(cache) == {"empty-conf", f"{key}.jsa.tried"}
     again, _ = _child(cache)
     assert again["archive"]["state"] == "skipped:dump-tried"
     assert _no_archive(again["java_options"])
-    assert _cache_files(cache) == ["empty-conf", f"{key}.jsa.tried"]
+    assert _cache_files(cache) == {"empty-conf", f"{key}.jsa.tried"}
+
+
+def test_claimant_killed_before_its_exit_hook_leaves_no_orphans(tmp_path):
+    cache = str(tmp_path)
+    report, _ = _child(cache, mode="sigterm", returncode=-signal.SIGTERM)
+    key, pid = report["archive"]["key"], report["pid"]
+    # the JVM ends on the EOF of its stdin and leaves its class list behind
+    _await_exit(report["jvm_pid"])
+    assert _cache_files(cache) == {"empty-conf", f"{key}.jsa.classlist-{pid}", f"{key}.jsa.tried"}
+    # and a dump it had started would have left a partial archive
+    with open(report["archive"]["path"] + f".tmp-{pid}", "wb") as fh:
+        fh.write(b"partial")
+    again, _ = _child(cache)
+    assert again["archive"]["state"] == "skipped:dump-tried"
+    assert _cache_files(cache) == {"empty-conf", f"{key}.jsa.tried"}
+
+
+def test_stopped_jvm_does_not_hold_the_interpreter(published):
+    report, out = _child(published[0], mode="stop_jvm")
+    try:
+        assert report["archive"]["state"] == "used"
+        waited = float(out.stdout.split("EXIT_HOOKS_S")[1].split()[0])
+        assert waited < 5.0 + 2.0, waited
+        assert _alive(report["jvm_pid"])
+    finally:
+        if _alive(report["jvm_pid"]):
+            os.kill(report["jvm_pid"], signal.SIGKILL)
+    _await_exit(report["jvm_pid"])
 
 
 def _copy_archive(published, cache: str, size: int | None = None) -> str:
@@ -171,13 +228,13 @@ def test_truncated_archive_is_not_used(published, tmp_path):
     assert _no_archive(report["java_options"])
 
 
-def test_archive_for_another_classpath_is_ignored(published, tmp_path):
+def test_archive_for_another_classpath_is_rejected(published, tmp_path):
     # the classpath starts with the cache's own empty conf directory, so an
     # archive dumped under another cache does not match this one's
-    _copy_archive(published, str(tmp_path))
-    report, out = _child(str(tmp_path))
-    assert report["archive"]["state"] == "used"
-    assert "Unable to use shared archive" in out.stderr
+    jsa = _copy_archive(published, str(tmp_path))
+    report, _ = _child(str(tmp_path))
+    assert report["archive"]["state"] == "rejected"
+    assert f"-XX:SharedArchiveFile={jsa}" in report["java_options"]
 
 
 def test_unwritable_cache_starts_without_archive(tmp_path):
@@ -197,4 +254,4 @@ def test_real_conf_dir_keeps_its_defaults_and_uses_no_archive(tmp_path):
     assert report["marker"] == "42"
     assert report["archive"]["state"] == "skipped:conf-dir"
     assert _no_archive(report["java_options"])
-    assert _cache_files(cache) == []
+    assert _cache_files(cache) == set()

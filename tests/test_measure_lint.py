@@ -48,7 +48,8 @@ DAEMON_KEY = "spark.python.daemon.module"
 SESSION = os.path.join(os.path.basename(PKG_DIR), "session.py")
 #: names only session.py may use: the JVM's CDS flags and the launcher's
 #: conf directory
-ARCHIVE_NAMES = ("SharedArchiveFile", "ArchiveClassesAtExit", "SPARK_CONF_DIR")
+ARCHIVE_NAMES = ("SharedArchiveFile", "DumpLoadedClassList", "SharedClassListFile",
+                 "SPARK_CONF_DIR")
 WORKER_KEY = "spark.python.worker.module"
 PROTOCOL_KINDS = {"noop sink", "git rev-parse", "os.getloadavg", "plan text",
                   "sha256 calibration loop"}
@@ -265,10 +266,10 @@ def test_jvm_archive_lint_catches_each_rule(tmp_path):
             good, "scripts/probe.py",
             'CONF = {"spark.driver.extraJavaOptions": "-XX:SharedArchiveFile=/x.jsa"}\n'),
         "dump in the package": copy(
-            good, f"{pkg}/catalog.py", 'OPTS = f"-XX:ArchiveClassesAtExit={path}"\n'),
+            good, f"{pkg}/catalog.py", 'OPTS = f"-XX:DumpLoadedClassList={path}"\n'),
         "conf dir at the top level": copy(
             good, "bench.py", 'import os\nos.environ["SPARK_CONF_DIR"] = "/tmp/c"\n'),
-        "moved out of session": copy(good.replace("ArchiveClassesAtExit", "ArchiveAtExit")),
+        "moved out of session": copy(good.replace("SharedClassListFile", "ClassListFile")),
     }
     for rule, root in broken.items():
         assert _archive_name_violations(root), f"lint missed: {rule}"
