@@ -209,11 +209,13 @@ def _cosine_scores_arrow(
             StructField("_raw_cosine", DoubleType()),
         ]
     )
-    qrows = (
+    # sorted on the driver: a Spark orderBy costs a range-sampling job and
+    # a shuffle for at most n_queries rows
+    qrows = sorted(
         df.select(F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("qv"))
         .filter(F.col("q_id") < n_queries)
-        .orderBy("q_id")
-        .collect()
+        .collect(),
+        key=lambda r: r.q_id,
     )
     if not qrows:
         # no ids below n_queries: an empty relation, as from the fold

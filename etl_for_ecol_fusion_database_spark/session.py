@@ -68,6 +68,22 @@ WORKER_CONF: dict[str, str] = {
     "spark.python.worker.module": "pyspark_ecol_worker",
 }
 
+#: launch conf for a ``local`` or ``local[...]`` master (not parity:
+#: results do not depend on it).  Streaming checkpoints (offset and commit
+#: logs, sink metadata, state schemas and state-store deltas) go through
+#: the FileSystem checkpoint manager.  The default FileContext manager
+#: renames each temp file with ``AbstractFileSystem.renameInternal``, which
+#: on ``file:`` calls ``getFileLinkStatus`` on both paths; without
+#: libhadoop each call forks a ``readlink`` shell from the driver JVM, ~3 ms
+#: each and ~120 per curation replay.  Nothing is lost: on ``file:`` both
+#: managers check the destination first and then make the same POSIX
+#: rename; the FileSystem manager checks with ``File.exists``.  (Spark
+#: before 4.1 keeps the class one package up, in ``...execution.streaming``.)
+LOCAL_CONF: dict[str, str] = {
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+}
+
 #: the directory holding the package and the worker module
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -135,10 +151,18 @@ def _alive(pid: int) -> bool:
         return True
 
 
-def _plan_archive() -> tuple[dict, list[str], str | None]:
+#: JVM options that install a class-file-load hook.  With the archive
+#: mapped, ``-XX:StartFlightRecording`` kills the JDK 17 driver JVM at its
+#: first job (SIGSEGV in ``KlassFactory::check_shared_class_file_load_hook``);
+#: the agents use the same hook, but that they crash too is not verified
+_AGENT_OPTIONS = ("-XX:StartFlightRecording", "-javaagent:", "-agentlib:", "-agentpath:")
+
+
+def _plan_archive(java_options: str = "") -> tuple[dict, list[str], str | None]:
     """(state, driver JVM options, conf dir to launch with) for a JVM about
-    to launch.  The archive holds JDK and Spark classes only, so its key
-    is the ``java`` binary, ``libjvm`` and the Spark jar listing."""
+    to launch with the caller's ``java_options``.  The archive holds JDK
+    and Spark classes only, so its key is the ``java`` binary, ``libjvm``
+    and the Spark jar listing."""
     from pyspark.find_spark_home import _find_spark_home
 
     state = {"state": None, "path": None, "bytes": None, "key": None}
@@ -146,6 +170,12 @@ def _plan_archive() -> tuple[dict, list[str], str | None]:
     def skip(reason: str) -> tuple[dict, list[str], None]:
         return {**state, "state": f"skipped:{reason}"}, [], None
 
+    # every JVM also reads JAVA_TOOL_OPTIONS, and the java launcher
+    # JDK_JAVA_OPTIONS
+    given = " ".join([java_options, *(os.environ.get(v, "") for v in
+                                      ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"))])
+    if any(a in given for a in _AGENT_OPTIONS):
+        return skip("jvm-agent")
     home = _find_spark_home()
     # CDS refuses a non-empty directory on the classpath, and the launcher
     # puts the conf directory first: an empty one stands in for it only
@@ -335,11 +365,10 @@ def get_spark(
     from pyspark import SparkContext
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-    )
-    for k, v in {**SCALE_CONF, **WORKER_CONF, **PARITY_CONF}.items():
+    master = master or f"local[{cpus}]"
+    builder = SparkSession.builder.appName(app_name).master(master)
+    local = LOCAL_CONF if master.split("[")[0] == "local" else {}
+    for k, v in {**SCALE_CONF, **WORKER_CONF, **local, **PARITY_CONF}.items():
         builder = builder.config(k, v)
     builder = builder.config(
         "spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus))
@@ -351,7 +380,8 @@ def get_spark(
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")) if p)
     launching = SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ
-    state, opts, conf_dir = _plan_archive() if launching else (None, [], None)
+    state, opts, conf_dir = (_plan_archive(conf.get("spark.driver.extraJavaOptions", ""))
+                             if launching else (None, [], None))
     if opts:
         conf["spark.driver.extraJavaOptions"] = " ".join(
             o for o in (conf.get("spark.driver.extraJavaOptions"), *opts) if o)

@@ -18,6 +18,11 @@ and no CDS log line reaches the child's stdout.
   archive built for another classpath, a cache that cannot be written,
   and a conf directory holding a real ``spark-defaults.conf`` (whose
   property must reach the session, with no archive).
+- Flight recording: a session started with ``-XX:StartFlightRecording``
+  over a published archive maps no archive (with one, the JVM crashes at
+  its first job), runs its jobs and a curation stream replay, and the
+  recording shows the replay forked no ``readlink``: local checkpoints go
+  through the FileSystem checkpoint manager (``session.LOCAL_CONF``).
 """
 
 from __future__ import annotations
@@ -35,6 +40,7 @@ from collections import Counter
 import pytest
 
 from etl_for_ecol_fusion_database_spark import session as session_mod
+from .conftest import SF_SMOKE
 
 REPO = session_mod.PACKAGE_ROOT
 #: the query every child runs, and its rows
@@ -47,7 +53,8 @@ from etl_for_ecol_fusion_database_spark import session
 t_start = []
 # registered first, so it runs after the session's exit hook
 atexit.register(lambda: t_start and print("EXIT_HOOKS_S", time.monotonic() - t_start[0], flush=True))
-spark = session.get_spark("jvm-archive", master="local[1]", shuffle_partitions=1)
+spark = session.get_spark("jvm-archive", master="local[1]", shuffle_partitions=1,
+                          extra_conf={extra!r})
 sc = spark.sparkContext
 rows = spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().orderBy("k").collect()
 print("RESULT " + json.dumps({{
@@ -82,17 +89,22 @@ elif mode == "stop_jvm":
     t_start.append(time.monotonic())
 elif mode == "sigterm":
     os.kill(os.getpid(), signal.SIGTERM)
+elif mode == "replay":
+    from etl_for_ecol_fusion_database_spark import registry
+    n = registry.QUERIES["x5_stream_curation_replay"](spark, {sf!r}).count()
+    print("REPLAY_ROWS", n, flush=True)
 """
 
 
-def _child(cache: str, *, mode: str = "", returncode: int = 0, **env):
+def _child(cache: str, *, mode: str = "", returncode: int = 0, extra: dict | None = None, **env):
     """Run one session in a child; return its report and the finished
     process."""
     full = dict(os.environ, XDG_CACHE_HOME=cache, SPARK_GRAFT_CPUS="1",
                 SPARK_GRAFT_DRIVER_MEM="1g", **env)
     # files, not pipes: a JVM left running holds its copy of them open
     with tempfile.TemporaryFile("w+") as fo, tempfile.TemporaryFile("w+") as fe:
-        rc = subprocess.run([sys.executable, "-c", CHILD.format(repo=REPO, mode=mode)],
+        code = CHILD.format(repo=REPO, mode=mode, extra=extra or {}, sf=SF_SMOKE)
+        rc = subprocess.run([sys.executable, "-c", code],
                             stdout=fo, stderr=fe, timeout=600, env=full, cwd=REPO).returncode
         fo.seek(0)
         fe.seek(0)
@@ -255,3 +267,36 @@ def test_real_conf_dir_keeps_its_defaults_and_uses_no_archive(tmp_path):
     assert report["archive"]["state"] == "skipped:conf-dir"
     assert _no_archive(report["java_options"])
     assert _cache_files(cache) == set()
+
+
+@pytest.fixture(scope="module")
+def flight_recording(published, tmp_path_factory):
+    """A session over the published archive with a JFR recording on,
+    which replays the curation stream: its report, its output and the
+    commands of the processes its JVM started."""
+    rec = str(tmp_path_factory.mktemp("jfr") / "session.jfr")
+    report, out = _child(published[0], mode="replay", extra={
+        "spark.driver.extraJavaOptions": f"-XX:StartFlightRecording=filename={rec},dumponexit=true"})
+    jfr = os.path.join(os.path.dirname(os.path.realpath(shutil.which("java"))), "jfr")
+    printed = subprocess.run([jfr, "print", "--events", "jdk.ProcessStart,jdk.JVMInformation",
+                              "--json", rec], capture_output=True, text=True, check=True)
+    events = json.loads(printed.stdout)["recording"]["events"]
+    assert any(e["type"] == "jdk.JVMInformation" for e in events), "the recording is empty"
+    commands = [e["values"]["command"] for e in events if e["type"] == "jdk.ProcessStart"]
+    return report, out, commands
+
+
+def test_flight_recording_session_maps_no_archive(flight_recording):
+    report, _, _ = flight_recording
+    assert report["archive"]["state"] == "skipped:jvm-agent"
+    assert "-XX:StartFlightRecording" in report["java_options"]
+    assert _no_archive(report["java_options"])
+
+
+def test_stream_replay_forks_no_readlink(flight_recording):
+    _, out, commands = flight_recording
+    assert int(out.stdout.split("REPLAY_ROWS")[1].split()[0]) > 0
+    # the FileContext checkpoint manager forks one per path it renames
+    # through (~70 in this replay); the FileSystem manager forks none
+    readlinks = [c for c in commands if os.path.basename(c.split()[0]) == "readlink"]
+    assert not readlinks, readlinks[:3]

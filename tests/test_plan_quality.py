@@ -546,16 +546,28 @@ def test_knn_join_plan_construction_runs_no_spark_jobs(spark, sf_dir):
 
     q14_r4b_scale._KNN_CORPUS_COUNT.clear()
 
-    def job_names():
-        jl = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
-        return {(jl.apply(i).jobId(), str(jl.apply(i).name())) for i in range(jl.size())}
-
-    before = job_names()
+    before = _job_names(spark)
     df = registry.QUERIES["x2_knn_join"](spark, sf_dir)
     # force full physical planning without execution
     df._jdf.queryExecution().executedPlan().toString()
-    new = job_names() - before
+    new = _job_names(spark) - before
     assert not new, f"plan construction ran Spark jobs: {sorted(new)}"
+
+
+def _job_names(spark) -> set[tuple[int, str]]:
+    jl = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return {(jl.apply(i).jobId(), str(jl.apply(i).name())) for i in range(jl.size())}
+
+
+def test_cosine_topk_build_runs_one_job(spark, sf_dir):
+    """Building x2_cosine_topk collects its query vectors, the Arrow
+    kernel's closure, in one job: they are sorted on the driver, where a
+    Spark ``orderBy`` would add a range-sampling job and a shuffle."""
+    before = _job_names(spark)
+    df = registry.QUERIES["x2_cosine_topk"](spark, sf_dir)
+    new = _job_names(spark) - before
+    assert len(new) == 1, f"x2_cosine_topk build ran {len(new)} jobs: {sorted(new)}"
+    assert df.count() > 0
 
 
 def test_table_row_count_matches_spark_count(spark, sf_dir):

@@ -255,6 +255,49 @@ def test_docs_curation_stream_matches_batch(spark, sf_dir, tmp_path):
     assert spark.read.parquet(dest).count() == len(got_fps)
 
 
+def test_docs_curation_stream_restart_reads_back_its_state(spark, sf_dir, tmp_path):
+    """Restart the curation stream on its checkpoint after a new arrival
+    that re-delivers docs the first run saw.  The sink must hold the batch
+    curation over all docs, each fingerprint once: the dedup state the
+    first run wrote (state-store deltas, through the session's checkpoint
+    manager) is read back.  The manager class must load, so a Spark
+    upgrade that moves it fails here, not inside a stream."""
+    from etl_for_ecol_fusion_database_spark import session
+    from etl_for_ecol_fusion_database_spark.streaming import docs_stream
+
+    manager = spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+    assert manager == session.LOCAL_CONF["spark.sql.streaming.checkpointFileManagerClass"]
+    spark.sparkContext._jvm.java.lang.Class.forName(manager)
+
+    docs = load_table(spark, sf_dir, "documents")
+    src, dest, ckpt = (str(tmp_path / d) for d in ("arrivals", "curated", "ckpt"))
+
+    def arrive(cond):
+        docs.filter(cond).coalesce(1).write.mode("append").parquet(src)
+
+    def replay() -> int:
+        q = docs_stream.run_curation_to_parquet(
+            docs_stream.read_documents_stream(spark, src), dest, ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        return spark.read.parquet(dest).count()
+
+    arrive(F.col("doc_id") % 3 == 0)
+    arrive(F.col("doc_id") % 3 == 1)
+    first = replay()
+    redelivered = F.col("doc_id") % 3 == 0
+    assert docs_stream.curate_documents(docs.filter(redelivered)).count() > 0
+    arrive((F.col("doc_id") % 3 == 2) | redelivered)
+    total = replay()
+
+    got_fps = {r["fingerprint"] for r in spark.read.parquet(dest).select("fingerprint").collect()}
+    want = docs_stream.curate_documents(docs)
+    want_fps = {r["fingerprint"] for r in want.select("fingerprint").collect()}
+    assert 0 < first < total
+    assert got_fps == want_fps
+    assert total == len(want_fps)
+
+
 def test_transform_with_state_matches_batch(spark, sf_dir):
     """transformWithStateInPandas (the Spark-4 StatefulProcessor API):
     after a full availableNow replay, the final emission per user must
