@@ -170,11 +170,7 @@ def _plan_archive(java_options: str = "") -> tuple[dict, list[str], str | None]:
     def skip(reason: str) -> tuple[dict, list[str], None]:
         return {**state, "state": f"skipped:{reason}"}, [], None
 
-    # every JVM also reads JAVA_TOOL_OPTIONS, and the java launcher
-    # JDK_JAVA_OPTIONS
-    given = " ".join([java_options, *(os.environ.get(v, "") for v in
-                                      ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS"))])
-    if any(a in given for a in _AGENT_OPTIONS):
+    if any(a in java_options for a in _AGENT_OPTIONS):
         return skip("jvm-agent")
     home = _find_spark_home()
     # CDS refuses a non-empty directory on the classpath, and the launcher
