@@ -158,7 +158,7 @@ def _alive(pid: int) -> bool:
 _AGENT_OPTIONS = ("-XX:StartFlightRecording", "-javaagent:", "-agentlib:", "-agentpath:")
 
 
-def _plan_archive(java_options: str = "") -> tuple[dict, list[str], str | None]:
+def _plan_archive(java_options: str) -> tuple[dict, list[str], str | None]:
     """(state, driver JVM options, conf dir to launch with) for a JVM about
     to launch with the caller's ``java_options``.  The archive holds JDK
     and Spark classes only, so its key is the ``java`` binary, ``libjvm``
